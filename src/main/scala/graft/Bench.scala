@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
+import graft.core.GraftSession
 import graft.queries.Registry
 
 /** Benchmark main: runs the headline query set on
@@ -18,16 +17,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+    val spark = GraftSession.local(appName = "graft-bench")
 
     // SPARK_GRAFT_BENCH_ONLY=a,b,c times just the named queries (cross-SF
     // curves, before/after checks); BENCH_ALL times the full registry.
@@ -65,9 +55,9 @@ object Bench {
     // Audited r20 (graft.tools.CountPruneAudit): 17 of 72 headliners
     // were under-timed, worst the as-of family (q56/q58/q59/q61 count
     // plans dropped the as-of join + BOTH windows — 4 scans -> 1,
-    // timing a plan that never ran the operator; the r14 SkewProbe
-    // lesson at bench scale), s16 (20 exchanges -> 4), t14b (22
-    // aggregates -> 10). The noop write computes every column of every
+    // timing a plan that never ran the operator; SCALE.md's r14
+    // skew-probe lesson at bench scale), s16 (20 exchanges -> 4), t14b
+    // (22 aggregates -> 10). The noop write computes every column of every
     // row and discards it. Old count-timed vs new noop-timed numbers
     // for the 17 affected queries are recorded in OPTIMIZATION_r20.md.
     // QUIET_ANCHORS/ORACLE_BENCH re-anchoring under the new action was
@@ -119,9 +109,11 @@ object Bench {
         // blocks are NOT recomputable — s14/s20 reps would then fail.
         // Resolution: at the driver's sf0.1 shape the accumulation is
         // harmless (blocks ≈ tens of MB/rep in a 4.6 GiB store);
-        // full-registry benches at sf1+ must set SPARK_DRIVER_MEM=48g
-        // (the documented r15 requirement) so ContextCleaner's own lazy
-        // collection keeps up without a forced pause.
+        // full-registry benches at sf1+ need the largest heap the host
+        // allows so ContextCleaner's own lazy collection keeps up without
+        // a forced pause: SPARK_DRIVER_MEM at MemTotal/2, clamped to
+        // 2-8g. r15 measured its requirement at 48g on a larger host;
+        // whether that clamped heap suffices at sf1+ is unverified.
         val t0 = System.nanoTime()
         // A failed rep is EXCLUDED from the median rather than recorded
         // as a sentinel — a -1.0 inside the sort would make a 2/3-pass
@@ -147,34 +139,18 @@ object Bench {
     // of 3 per headline query, keyed by sf basename); when present the
     // bench line carries per-query spark/duckdb ratios. Loaded BEFORE
     // the rerun decision — the anchors are a defense trigger too.
-    val oracleTimes: Map[String, Double] = try {
-      // check.py writes the repo-root path; the cwd-relative name covers
-      // running from the repo itself or a custom launcher dir
-      val f = Seq(
+    // check.py writes the repo-root path; the cwd-relative name covers
+    // running from the repo itself or a custom launcher dir
+    val oracleTimes = loadAnchors(sfDir,
         sys.env.getOrElse("SPARK_GRAFT_ORACLE_BENCH", "ORACLE_BENCH.json"),
         "/root/repo/ORACLE_BENCH.json")
-        .map(new java.io.File(_)).find(_.isFile).get
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(f).path(new java.io.File(sfDir).getName)
-      val it = node.fieldNames()
-      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-        .map(k => k -> node.get(k).asDouble()).toMap
-    } catch { case _: Throwable => Map.empty }
 
     // Quiet-load anchors: the builder's median-of-3 readings taken at
     // load1 < ~2 (the BASELINE.md per-round table, machine-readable).
     // Third defense trigger — see needsRerun's scaladoc.
-    val quietTimes: Map[String, Double] = try {
-      val f = Seq(
+    val quietTimes = loadAnchors(sfDir,
         sys.env.getOrElse("SPARK_GRAFT_QUIET_ANCHORS", "QUIET_ANCHORS.json"),
         "/root/repo/QUIET_ANCHORS.json")
-        .map(new java.io.File(_)).find(_.isFile).get
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(f).path(new java.io.File(sfDir).getName)
-      val it = node.fieldNames()
-      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-        .map(k => k -> node.get(k).asDouble()).toMap
-    } catch { case _: Throwable => Map.empty }
 
     // Self-defense against ambient-load outliers (the r7 d06/d08/d09
     // episode: 4–12× apparent regressions with zero code change): any
@@ -321,6 +297,20 @@ object Bench {
     val nFailed = results.count(_._2 < 0)
     s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","n":${results.size},"n_failed":$nFailed,"load1":${num(load1, 2)},"sf":"${new java.io.File(sfDir).getName}"}"""
   }
+
+  /** Per-query seconds keyed under `sfDir`'s basename, read from the
+    * first of `paths` that is a file (ORACLE_BENCH.json and
+    * QUIET_ANCHORS.json share this shape). Empty when no file exists or
+    * it has no entry for this SF.
+    */
+  private def loadAnchors(sfDir: String, paths: String*): Map[String, Double] = try {
+    val f = paths.map(new java.io.File(_)).find(_.isFile).get
+    val node = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(f).path(new java.io.File(sfDir).getName)
+    val it = node.fieldNames()
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(k => k -> node.get(k).asDouble()).toMap
+  } catch { case _: Throwable => Map.empty }
 
   // ---- ambient-load self-defense plumbing (pinned by BenchDefenseSpec) ----
 

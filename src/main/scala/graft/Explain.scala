@@ -25,7 +25,6 @@ object Explain {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
 
     val spark = GraftSession.local(appName = "graft-explain")
-    graft.plans.GraftExtensions.install(spark) // audit the plans the gate actually runs
     names.foreach { name =>
       println(s"========== $name ==========")
       val df = surrogates.get(name) match {

@@ -1,6 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.core.GraftSession
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -30,18 +32,9 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // run the gate through the engine's own extension layer (native SQL
-    // functions, kernel rewrites, TopKPerGroup rank-limit operator)
-    graft.plans.GraftExtensions.install(spark)
+    // the factory installs the engine's own extension layer, so the
+    // gate checks the plans every other entry point runs
+    val spark = GraftSession.local(appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       // drop any PRIOR dump first: a query that throws must leave NO

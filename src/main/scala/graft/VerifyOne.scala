@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 /** Subset correctness dump: like `graft.Verify` but for one or more
   * (comma-separated) registry queries — pairs with
   * `tools/check.py <sf> <out> --skip-verify <name...>` for a fast
@@ -34,14 +34,7 @@ object VerifyOne {
     val Array(names, sfDir, outDir) = args
     val requested = names.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     validateNames(requested)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+    val spark = GraftSession.local(appName = "graft-verify-one")
     new java.io.File(outDir).mkdirs()
     val fresh = requested.map { name =>
       val q = graft.queries.Registry.byName(name)

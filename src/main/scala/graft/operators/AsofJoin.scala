@@ -253,11 +253,11 @@ object AsofJoin {
     *                   temporal reads pay it once — so a hot key's
     *                   timeline spreads across ~one task per core at
     *                   ANY data span without the caller guessing;
-    *                   SkewProbe measures the derived width within
-    *                   noise of the best hand-picked width on both
-    *                   skew regimes. Pass an explicit width ≈
-    *                   (expected span) / (desired per-key parallelism)
-    *                   to override.
+    *                   SCALE.md's skew-probe readings (r14, r16) put
+    *                   the derived width within noise of the best
+    *                   hand-picked width on both skew regimes. Pass
+    *                   an explicit width ≈ (expected span) /
+    *                   (desired per-key parallelism) to override.
     */
   def asofJoinSliced(
       left: DataFrame,

@@ -1196,9 +1196,11 @@ object TextQueries {
     * partials; first sighting is min(decile) per type — decile is
     * monotone in doc_id, so decile(min(doc_id)) = min(decile)) and ONE
     * 1-row global roll-up (per-decile token totals + first-sighting
-    * type counts): 3 exchanges total (corpus spread, type hash, final
-    * single row), zero joins, no runtime-reuse dependency. All
-    * integers end-to-end, so cross-engine equality is exact.
+    * type counts): 4 exchanges total (corpus spread, the 1-row
+    * corpus-count aggregate, the per-type hash aggregate, the
+    * single-row roll-up — PlanShapeSpec pins the count), zero joins,
+    * no runtime-reuse dependency. All integers end-to-end, so
+    * cross-engine equality is exact.
     */
   private[graft] def t25Base(
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {

@@ -104,7 +104,6 @@ object CountPruneAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val spark = graft.core.GraftSession.local(appName = "count-prune-audit")
-    graft.plans.GraftExtensions.install(spark)
     var flagged = 0
     Registry.headline.foreach { q =>
       val df = q.run(spark, sfDir)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-shape probe for the incremental faces — every stream ≡ batch
@@ -60,16 +60,7 @@ object IncrementalProbe {
     require(Set("all", "manifest", "graphann", "index", "ann", "spancensus")(face),
       s"face must be all|manifest|graphann|index|ann|spancensus, got '$face'")
     def runs(f: String): Boolean = face == "all" || face == f
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+    val spark = graft.core.GraftSession.local(appName = "incremental-probe")
     import spark.implicits._
 
     def timed[A](f: => A): (A, Double) = {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize a larger SF from an existing one by key-offset
@@ -46,14 +46,7 @@ object ScaleData {
     val Array(inDir, outDir, copiesStr) = args
     val copies = copiesStr.toInt
     require(copies >= 1, s"copies must be >= 1, got $copies")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(appName = "scale-data")
     import spark.implicits._
 
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))

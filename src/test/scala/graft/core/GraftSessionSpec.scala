@@ -1,0 +1,55 @@
+package graft.core
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import graft.SparkSpec
+import graft.plans.{GraftExtensions, NativeKernelRule, RankLimitRule, TopKStrategy}
+
+/** `GraftSession.local` is the engine's one session factory. These
+  * checks keep it that way without building a session through it
+  * (getOrCreate would hand back the shared test session and
+  * reconfigure it).
+  */
+class GraftSessionSpec extends SparkSpec {
+
+  /** (path relative to `root`, line) for every non-comment line. */
+  private def codeLines(root: Path): Seq[(String, String)] = {
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .flatMap { f =>
+        Files.readAllLines(f).asScala
+          .filterNot { l =>
+            val t = l.trim
+            t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+          }
+          .map(root.relativize(f).toString -> _)
+      }
+    finally walk.close()
+  }
+
+  test("only the factory builds a session or installs the extensions in src/main") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath} is missing")
+    val factory = "graft/core/GraftSession.scala"
+    val offenders = codeLines(root).collect {
+      case (file, line) if file != factory &&
+        (line.contains(".builder()") || line.contains("GraftExtensions.install(")) =>
+        s"$file: ${line.trim}"
+    }
+    if (offenders.nonEmpty)
+      fail("build sessions through graft.core.GraftSession.local instead:\n" +
+        offenders.mkString("\n"))
+  }
+
+  test("GraftExtensions.install is idempotent: a second install adds nothing") {
+    GraftExtensions.install(spark)
+    GraftExtensions.install(spark)
+    val rules = spark.experimental.extraOptimizations
+    assert(rules.count(_ == NativeKernelRule) == 1, rules)
+    assert(rules.count(_ == RankLimitRule) == 1, rules)
+    assert(spark.experimental.extraStrategies.count(_ == TopKStrategy) == 1,
+      spark.experimental.extraStrategies)
+  }
+}
