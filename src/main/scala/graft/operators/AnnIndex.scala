@@ -3,65 +3,30 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Per-session memo for DRIVER-SIDE fitted ANN model artifacts —
-  * coarse-quantizer centroids, PQ codebooks, collected seed batches.
-  *
-  * Production ANN serving fits an index ONCE and answers many queries
-  * against it; before this memo every query in the s02/s08/s09/s10/s11
-  * family refit its coarse quantizer and/or PQ codebook from scratch,
-  * paying one driver round-trip per fit per query (the r8 verdict's
-  * s10 finding: the composed IVF×PQ query paid fitCodebook + centroid
-  * collect + query-batch collect before touching a single candidate).
-  * Entries are model-sized (k × dim floats, m × k × subDim codewords —
-  * KBs), never corpus-sized, so the memo holds bounded driver memory
-  * for the session's lifetime.
-  *
-  * The [[TextDedup.sharedSignatures]] pattern, applied to models:
-  * keyed by input identity ([[PlanKey]]: canonicalized plan + leaf
-  * paths + input-files digest) plus fit parameters, so a changed
-  * corpus or different hyperparameters refit rather than serve stale
-  * models. `Bench` clears it per timed rep (like the signature memo)
-  * so every official reading still measures the full fit+search cost.
+/** Driver-side seed collection for the ANN family's fitted models —
+  * coarse-quantizer centroids and PQ codebook seeds are both "the
+  * first n vectors by id". Nothing is memoized: a query that needs
+  * both models collects the larger prefix once and slices it, then
+  * passes the arrays down (the s10/s18 shape).
   */
 object AnnIndex {
 
-  // Not a WeakHashMap: cached arrays are cheap but the map key is the
-  // session — dead sessions are evicted explicitly on every access.
-  private val cache =
-    scala.collection.concurrent.TrieMap
-      .empty[SparkSession, scala.collection.concurrent.TrieMap[String, AnyRef]]
-
-  private def evictStopped(): Unit =
-    cache.keySet.foreach(s => if (s.sparkContext.isStopped) cache.remove(s))
-
-  /** Memoize a deterministic driver-side fit keyed by `df`'s input
-    * identity + `tag` (the fit's parameters, caller-encoded).
-    */
-  def memo[T <: AnyRef](df: DataFrame, tag: String)(fit: => T): T = {
-    evictStopped()
-    val m = cache.getOrElseUpdate(df.sparkSession,
-      scala.collection.concurrent.TrieMap.empty)
-    m.getOrElseUpdate(s"$tag|${PlanKey.of(df)}", fit).asInstanceOf[T]
-  }
-
-  /** The `n` lowest-id vectors of `df` as (id, vector) pairs — the one
-    * collect behind deterministic codebook seeds AND coarse centroids
-    * (both are "first n by id"), so a composed index (IVF×PQ) fitting
-    * both from the same frame pays a single driver round-trip.
+  /** The `n` lowest-id vectors of `df` as (id, vector) pairs — one
+    * driver round-trip.
     */
   def firstVectors(
       df: DataFrame,
       vecCol: String,
       idCol: String,
       n: Int): Array[(Long, Array[Float])] =
-    memo(df, s"firstvecs|$vecCol|$idCol|$n") {
-      df.orderBy(col(idCol).asc).limit(n)
-        .select(col(idCol).cast("long"), col(vecCol)).collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-    }
+    df.orderBy(col(idCol).asc).limit(n)
+      .select(col(idCol).cast("long"), col(vecCol)).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
 
-  /** Drop `spark`'s model memo. Bench calls this per rep so timed
-    * reps measure the full fit+search pipeline, not a cache read.
+  /** No-op: fitted models are no longer memoized, so there is nothing
+    * to drop. Kept only because
+    * `perfbench/src/main/scala/perfbench/Harness.scala:91-92` calls it
+    * before every query, and nothing under `perfbench/` may change.
     */
-  def clear(spark: SparkSession): Unit = cache.remove(spark)
+  def clear(spark: SparkSession): Unit = ()
 }

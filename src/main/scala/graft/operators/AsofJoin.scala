@@ -196,27 +196,6 @@ object AsofJoin {
   /** Sentinel: derive the slice width from the data (see [[asofJoinSliced]]). */
   val DerivedWidth: Long = 0L
 
-  /** Session-scoped span memo behind the derived slice width. The
-    * width census is one column-pruned pass over both inputs — at
-    * 100 TB a full extra scan per temporal query, paid before any real
-    * work starts. But the span is a property of the INPUT DATA, not of
-    * the call, so it memoizes on the inputs' identity ([[PlanKey]]:
-    * canonicalized plans + concrete file digests, so appends/rewrites
-    * under an unchanged path invalidate) and is computed once per
-    * input pair per process. Direction is deliberately NOT in the key:
-    * the traversal axis is the ts units up to sign and the span is
-    * sign-invariant, so backward and forward reads over the same
-    * inputs share one census. The sharedGraph widened-key lesson
-    * applied from day one: the value depends only on (left, right,
-    * tsCol) — exactly the key. `None` = empty inputs (width falls
-    * back to one slice).
-    */
-  private val spanMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[Long]]()
-
-  /** Drop memoized width censuses (test isolation). */
-  def clearSpanMemo(): Unit = spanMemo.clear()
-
   /** Skew-safe two-phase merge-asof; row-identical to [[asofJoin]]
     * (AsofJoinPropertySpec pins the equivalence on adversarial and
     * deliberately hot-keyed inputs, in both directions).
@@ -248,9 +227,8 @@ object AsofJoin {
     *                   default, 0) derives span / defaultParallelism
     *                   from a two-scalar min/max census over both
     *                   sides (the q58 grid-bounds pattern) — one
-    *                   column-pruned scan, memoized per input pair
-    *                   (direction-blind; see `spanMemo`) so repeated
-    *                   temporal reads pay it once — so a hot key's
+    *                   column-pruned eager min/max action per call,
+    *                   paid before the join is planned — so a hot key's
     *                   timeline spreads across ~one task per core at
     *                   ANY data span without the caller guessing;
     *                   SCALE.md's skew-probe readings (r14, r16) put
@@ -276,20 +254,13 @@ object AsofJoin {
       else {
         // span / parallelism: ~one slice per core, so one hot key's
         // history spreads across the whole cluster stage. Min/max of
-        // the signed axis over BOTH sides (a column-pruned scan),
-        // memoized on the inputs' identity so a session's temporal
-        // family pays it once per input pair, not once per call;
+        // the signed axis over BOTH sides (a column-pruned scan);
         // empty inputs fall back to one slice.
-        val spark = left.sparkSession
-        val memoKey = PlanKey.of(left, PlanKey.of(right), tsCol)
-        val span = spanMemo.computeIfAbsent(memoKey, _ => {
-          val r = p.l.select(col("__u")).unionByName(p.r.select(col("__u")))
-            .agg(min(col("__u")), max(col("__u"))).head()
-          if (r.isNullAt(0)) None
-          else Some(r.getLong(1) - r.getLong(0) + 1)
-        })
-        span.fold(1L)(s =>
-          math.max(1L, s / spark.sparkContext.defaultParallelism))
+        val r = p.l.select(col("__u")).unionByName(p.r.select(col("__u")))
+          .agg(min(col("__u")), max(col("__u"))).head()
+        if (r.isNullAt(0)) 1L
+        else math.max(1L,
+          (r.getLong(1) - r.getLong(0) + 1) / left.sparkSession.sparkContext.defaultParallelism)
       }
     // `div` = integral division (truncated; monotone either way, which
     // is all slicing needs) — double `/` would round at µs magnitudes.

@@ -35,12 +35,6 @@ object Bm25 {
       build: => DataFrame): DataFrame =
     shared.computeIfAbsent((spark, tag), _ => build.localCheckpoint(true))
 
-  /** Drop this session's shared rankings (test isolation). */
-  def clearShared(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val it = shared.keySet().iterator()
-    while (it.hasNext) if (it.next()._1 eq spark) it.remove()
-  }
-
   /** Top-k BM25 per query over a posting-list frame.
     *
     * @param tf postings carrying document length: (doc_id, dl, term, tf)

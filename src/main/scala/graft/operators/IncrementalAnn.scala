@@ -57,8 +57,9 @@ object IncrementalAnn {
       .filter { case (_, p) => fs.exists(new Path(p, "codes/_SUCCESS")) }
 
   /** Fit the frozen model (coarse centroids = first `nCentroids`
-    * vectors by id, PQ codebook per [[ProductQuantizer.fitCodebook]])
-    * from a reference frame and persist it under `indexDir/model/`.
+    * vectors by id, PQ codebook = [[ProductQuantizer.seedCodebook]] of
+    * the first `k`) from a reference frame and persist it under
+    * `indexDir/model/`.
     * Idempotent: an existing committed model is left untouched, so
     * the index's geometry can never drift between retries.
     */
@@ -78,8 +79,11 @@ object IncrementalAnn {
     if (fs.exists(new Path(indexPath, "model/centroids/_SUCCESS")) &&
       fs.exists(new Path(indexPath, "model/codebook/_SUCCESS")))
       return loadModel(spark, indexDir)
-    val cents = AnnIndex.firstVectors(refVecs, vecCol, idCol, nCentroids).map(_._2)
-    val cb = ProductQuantizer.fitCodebook(refVecs, vecCol, idCol, m, k, dim)
+    // centroids and codebook seeds are both "first n by id": one
+    // collect of the longer prefix serves both
+    val first = AnnIndex.firstVectors(refVecs, vecCol, idCol, math.max(nCentroids, k)).map(_._2)
+    val cents = first.take(nCentroids)
+    val cb = ProductQuantizer.seedCodebook(first.take(k), m, dim)
     cents.zipWithIndex.toSeq.map { case (v, i) => (i.toLong, v.toSeq) }
       .toDF("c_id", "vec")
       .coalesce(1).write.mode("overwrite")

@@ -79,7 +79,7 @@ object IncrementalManifest {
         new Path(root, s"verdicts/batch=$batchId").toString)
       val s2docs = newDocs.join(
         verd.filter(col("early").isNull).select(col(idCol)), Seq(idCol))
-      val meta = TextDedup.sharedSignatures(s2docs, idCol, textCol)
+      val meta = TextDedup.minhashSignatures(s2docs, idCol, textCol)
         .join(s2docs.select(col(idCol), col(sourceCol).as("source"),
           graft.functions.TextFunctions.tokenCount(col(textCol))
             .cast("long").as("tok")), Seq(idCol))

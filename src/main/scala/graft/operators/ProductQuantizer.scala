@@ -50,15 +50,9 @@ object ProductQuantizer {
     * and replayable by an external oracle. `refineIters` > 0 runs that
     * many Lloyd iterations PER SUBSPACE (reusing [[KMeans.fit]] on the
     * sliced frame) — the production path; refinement only moves
-    * codewords, never changes the search plumbing.
-    *
-    * Memoized per (session, input identity, params) via [[AnnIndex]]:
-    * an ANN index is fit once and serves many queries, so the
-    * s02/s08/s09/s10/s11 family shares one fit per session instead of
-    * paying a driver round-trip (or a full Lloyd run) per query. The
-    * seed collect itself goes through [[AnnIndex.firstVectors]], so a
-    * composed IVF×PQ index whose coarse centroids are the same first-k
-    * vectors pays a single collect for both models.
+    * codewords, never changes the search plumbing. One seed collect
+    * per call; a query that also needs the same first-k vectors as
+    * coarse centroids collects once and calls [[seedCodebook]].
     */
   def fitCodebook(
       df: DataFrame,
@@ -67,39 +61,44 @@ object ProductQuantizer {
       m: Int,
       k: Int,
       dim: Int,
-      refineIters: Int = 0): Codebook =
-    AnnIndex.memo(df, s"pqcb|$vecCol|$idCol|$m|$k|$dim|$refineIters") {
-      require(dim % m == 0, s"dim $dim not divisible by m $m")
-      val subDim = dim / m
-      // a shorter vector would silently mis-slice in EITHER branch
-      // (slice() truncates, dot() folds over the shorter side, and the
-      // Lloyd branch's sub() would quietly train on truncated slices) —
-      // validate the k seed vectors before any codebook math
-      val seeds = AnnIndex.firstVectors(df, vecCol, idCol, k).map(_._2)
-      seeds.find(_.length != dim).foreach(s =>
-        throw new IllegalArgumentException(
-          s"codebook seed has ${s.length} dims, expected $dim"))
-      if (refineIters == 0) {
-        Codebook(subDim,
-          Array.tabulate(m)(j => seeds.map(_.slice(j * subDim, (j + 1) * subDim))))
-      } else {
-        val codes = Array.tabulate(m) { j =>
-          // Lloyd trains on EVERY row, not just the validated seeds: a
-          // wrong-dimension non-seed vector would silently contribute a
-          // truncated slice, so the slice input fails loudly instead.
-          // The guard lives INSIDE the __sub projection (not a dropped
-          // assert column Catalyst could prune away).
-          val guarded = when(size(col(vecCol)) === dim, col(vecCol))
-            .otherwise(raise_error(concat(
-              lit("PQ vector has "), size(col(vecCol)).cast("string"),
-              lit(s" dims, expected $dim"))))
-          val sliced = df.select(col(idCol), sub(guarded, j, subDim).as("__sub"))
-          KMeans.fit(sliced, "__sub", idCol, k, refineIters, computeWcss = false)
-            .centroids.map(_.map(_.toFloat))
-        }
-        Codebook(subDim, codes)
+      refineIters: Int = 0): Codebook = {
+    require(dim % m == 0, s"dim $dim not divisible by m $m")
+    val seeded = seedCodebook(AnnIndex.firstVectors(df, vecCol, idCol, k).map(_._2), m, dim)
+    if (refineIters == 0) seeded
+    else {
+      val subDim = seeded.subDim
+      val codes = Array.tabulate(m) { j =>
+        // Lloyd trains on EVERY row, not just the validated seeds: a
+        // wrong-dimension non-seed vector would silently contribute a
+        // truncated slice, so the slice input fails loudly instead.
+        // The guard lives INSIDE the __sub projection (not a dropped
+        // assert column Catalyst could prune away).
+        val guarded = when(size(col(vecCol)) === dim, col(vecCol))
+          .otherwise(raise_error(concat(
+            lit("PQ vector has "), size(col(vecCol)).cast("string"),
+            lit(s" dims, expected $dim"))))
+        val sliced = df.select(col(idCol), sub(guarded, j, subDim).as("__sub"))
+        KMeans.fit(sliced, "__sub", idCol, k, refineIters, computeWcss = false)
+          .centroids.map(_.map(_.toFloat))
       }
+      Codebook(subDim, codes)
     }
+  }
+
+  /** Codebook whose codewords are `seeds`' m subspace slices (the
+    * unrefined [[fitCodebook]]), from seed vectors the caller already
+    * holds. A shorter vector would silently mis-slice (slice()
+    * truncates, dot() folds over the shorter side), so every seed is
+    * validated before any codebook math.
+    */
+  private[graft] def seedCodebook(seeds: Array[Array[Float]], m: Int, dim: Int): Codebook = {
+    require(dim % m == 0, s"dim $dim not divisible by m $m")
+    seeds.find(_.length != dim).foreach(s =>
+      throw new IllegalArgumentException(
+        s"codebook seed has ${s.length} dims, expected $dim"))
+    val subDim = dim / m
+    Codebook(subDim, Array.tabulate(m)(j => seeds.map(_.slice(j * subDim, (j + 1) * subDim))))
+  }
 
   /** Append `code_0..code_{m-1}` (int): per subspace, the index of the
     * nearest codeword (rounded squared L2, first-min tie-break). One
@@ -306,32 +305,12 @@ object ProductQuantizer {
       centroids: Array[Array[Float]],
       m: Int,
       k: Int,
-      dim: Int): Codebook =
-    AnnIndex.memo(assigned,
-      s"pqcbres|$vecCol|$cellCol|$idCol|$m|$k|$dim|${centsDigest(centroids)}") {
-      require(dim % m == 0, s"dim $dim not divisible by m $m")
-      val subDim = dim / m
-      val seeds = assigned.orderBy(col(idCol).asc).limit(k)
-        .select(col(vecCol), col(cellCol).cast("long")).collect()
-        .map(r => residualOf(r.getSeq[Float](0).toArray, centroids(r.getLong(1).toInt)))
-      seeds.find(_.length != dim).foreach(s =>
-        throw new IllegalArgumentException(
-          s"residual codebook seed has ${s.length} dims, expected $dim"))
-      Codebook(subDim,
-        Array.tabulate(m)(j => seeds.map(_.slice(j * subDim, (j + 1) * subDim))))
-    }
-
-  /** Content digest of a centroid set — memo-key component so a
-    * residual codebook fit against different coarse centroids can't
-    * serve from the wrong cache entry.
-    */
-  private def centsDigest(centroids: Array[Array[Float]]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val buf = java.nio.ByteBuffer.allocate(4)
-    centroids.foreach { c =>
-      c.foreach { x => buf.clear(); buf.putFloat(x); md.update(buf.array()) }
-    }
-    md.digest().map("%02x".format(_)).mkString
+      dim: Int): Codebook = {
+    require(dim % m == 0, s"dim $dim not divisible by m $m")
+    val seeds = assigned.orderBy(col(idCol).asc).limit(k)
+      .select(col(vecCol), col(cellCol).cast("long")).collect()
+      .map(r => residualOf(r.getSeq[Float](0).toArray, centroids(r.getLong(1).toInt)))
+    seedCodebook(seeds, m, dim)
   }
 
   /** Append residual-PQ codes: per subspace, the nearest codeword to

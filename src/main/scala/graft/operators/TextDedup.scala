@@ -64,50 +64,12 @@ object TextDedup {
     hashed.groupBy(col(idCol)).agg(mhCols.head, mhCols.tail: _*)
   }
 
-  // ---- per-session signature memo ----------------------------------
-  // d02 (Jaccard verification), d03 (LSH candidates) and d06 (cluster
-  // collapse) all start from the same shingle→minhash aggregation — the
-  // dominant cost of candidate generation. Memoize the checkpointed
-  // signature frame per (session, input plan, input files) so one
-  // session running the whole dedup ladder computes signatures once.
-  // Entries hold O(docs × k) longs in checkpoint storage for the
-  // session's lifetime (or until `clearSharedSignatures` — Bench calls
-  // it per rep so every timed rep still measures the full pipeline).
-  // Not a WeakHashMap: the cached Datasets strongly reference their
-  // SparkSession, so weak keys would never become collectable — dead
-  // sessions are instead evicted explicitly on every access.
-  private val sigCache =
-    scala.collection.concurrent.TrieMap
-      .empty[SparkSession, scala.collection.concurrent.TrieMap[String, DataFrame]]
-
-  private def evictStopped(): Unit =
-    sigCache.keySet.foreach(s => if (s.sparkContext.isStopped) sigCache.remove(s))
-
-  /** Memo key: input identity via [[PlanKey]] (canonicalized plan +
-    * leaf paths/content digests + input-files digest) plus the column
-    * choices that change what a signature frame means.
+  /** No-op: signatures are no longer memoized across calls, so there
+    * is nothing to drop. Kept only because
+    * `perfbench/src/main/scala/perfbench/Harness.scala:91-92` calls it
+    * before every query, and nothing under `perfbench/` may change.
     */
-  private def planKey(docs: DataFrame, idCol: String, textCol: String): String =
-    PlanKey.of(docs, idCol, textCol)
-
-  /** Checkpointed [[minhashSignatures]], memoized per session + input.
-    * localCheckpoint rather than persist(): a persisted DataFrame pins a
-    * CacheManager entry and recomputes per consuming branch until
-    * materialized, while an eager checkpoint materializes once and its
-    * blocks are reclaimed by the ContextCleaner when unreferenced.
-    */
-  def sharedSignatures(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    evictStopped()
-    val m = sigCache.getOrElseUpdate(docs.sparkSession,
-      scala.collection.concurrent.TrieMap.empty)
-    m.getOrElseUpdate(planKey(docs, idCol, textCol),
-      minhashSignatures(docs, idCol, textCol).localCheckpoint(true))
-  }
-
-  /** Drop `spark`'s signature memo (checkpoint blocks become collectable
-    * once the frames are unreferenced).
-    */
-  def clearSharedSignatures(spark: SparkSession): Unit = sigCache.remove(spark)
+  def clearSharedSignatures(spark: SparkSession): Unit = ()
 
   /** Banded LSH keys of a signature frame: one row per (doc, band)
     * with the band's row-concatenated bucket key. Shared by the batch
@@ -158,9 +120,10 @@ object TextDedup {
     // and the estimate stage reads them twice more — without the
     // materialization the shingle→minhash aggregation reruns per
     // branch. Signatures are O(docs × k) longs (tiny next to the
-    // corpus), and the memo means d02/d03/d06 in one session share one
-    // computation.
-    val mins = sharedSignatures(docs, idCol, textCol)
+    // corpus). localCheckpoint rather than persist(): an eager
+    // checkpoint materializes once and its blocks are reclaimed by the
+    // ContextCleaner when unreferenced, with no CacheManager entry.
+    val mins = minhashSignatures(docs, idCol, textCol).localCheckpoint(true)
     val exploded = bandFrame(mins, idCol)
     val cand = Salting
       .skewSelfJoinPairs(exploded, Seq("band_id", "bkey"), idCol,

@@ -78,20 +78,26 @@ object SimilarityQueries {
   // assignment = max rounded cosine with id tie-break, probes = each
   // query's NPROBE nearest cells.
 
-  /** The coarse centroids as a driver-side array indexed by cell id
-    * (dense first-N vec_ids, asserted) — shared by the zero-shuffle
-    * assignment, probe selection and the residual-PQ math (s11).
+  /** The first `n` vectors as a driver-side array indexed by vec_id
+    * (dense first-n vec_ids, asserted) — one collect. The coarse
+    * centroids are its first NCENTROIDS rows and the PQ codebook seeds
+    * its first PqK, so a query needing both collects the longer prefix
+    * once and slices it.
     */
-  private def centroidArray(s: org.apache.spark.sql.SparkSession, dir: String): Array[Array[Float]] = {
-    // AnnIndex memo: ONE collect per session serves coarse assignment,
-    // probe selection AND (via the same firstvecs key) the PQ codebook
-    // seeds — before r9 every query in the family re-collected it
-    val cents = graft.operators.AnnIndex
-      .firstVectors(Tables.embeddings(s, dir), "embedding", "vec_id", NCENTROIDS)
-    require(cents.map(_._1).toSeq == cents.indices.map(_.toLong),
-      "coarse cells must be the dense first-N vec_ids")
-    cents.map(_._2)
+  private def firstVecs(s: org.apache.spark.sql.SparkSession, dir: String, n: Int): Array[Array[Float]] = {
+    val vs = graft.operators.AnnIndex
+      .firstVectors(Tables.embeddings(s, dir), "embedding", "vec_id", n)
+    require(vs.map(_._1).toSeq == vs.indices.map(_.toLong),
+      "the first-n vectors must be the dense vec_ids 0..n-1")
+    vs.map(_._2)
   }
+
+  /** The coarse centroids indexed by cell id, collected once per query
+    * and passed to the zero-shuffle assignment, probe selection and
+    * the residual-PQ math (s11).
+    */
+  private def centroidArray(s: org.apache.spark.sql.SparkSession, dir: String): Array[Array[Float]] =
+    firstVecs(s, dir, NCENTROIDS)
 
   /** (vec_id, embedding, c_id): corpus vector → nearest coarse cell.
     * ZERO-shuffle: centroids are collected driver-side (NCENTROIDS ×
@@ -106,7 +112,8 @@ object SimilarityQueries {
     * c_id on ties), and an all-NULL row (zero vector) falls to cell 0
     * exactly like ORDER BY cos DESC NULLS LAST, c_id ASC.
     */
-  private def coarseAssign(s: org.apache.spark.sql.SparkSession, dir: String) = {
+  private def coarseAssign(
+      s: org.apache.spark.sql.SparkSession, dir: String, cents: Array[Array[Float]]) = {
     import s.implicits._
     // ONE native kernel call per row (CoarseAssignCell) — the
     // declarative k-cosine array tree below costs the optimizer +
@@ -116,7 +123,7 @@ object SimilarityQueries {
       .repartition(s.sparkContext.defaultParallelism)
       .select($"vec_id", $"embedding",
         graft.functions.exprs
-          .coarse_assign_cell($"embedding", centroidArray(s, dir)).as("c_id"))
+          .coarse_assign_cell($"embedding", cents).as("c_id"))
   }
 
   /** Declarative reference implementation of [[coarseAssign]]'s cell
@@ -132,9 +139,7 @@ object SimilarityQueries {
       .minus(1).cast("long")
   }
 
-  /** The dense first-NQ query vectors, via the same [[AnnIndex]]
-    * collect that serves centroids and codebook seeds.
-    */
+  /** The dense first-NQ query vectors (one collect). */
   private def queryVectors(s: org.apache.spark.sql.SparkSession, dir: String): Array[(Long, Array[Float])] = {
     val qs = graft.operators.AnnIndex
       .firstVectors(Tables.embeddings(s, dir), "embedding", "vec_id", NQ)
@@ -157,9 +162,9 @@ object SimilarityQueries {
     * (a zero-norm query or centroid yields NULL cosine → sorts last,
     * ties on rounded cosine break toward the lower cell id).
     */
-  private def coarseProbes(s: org.apache.spark.sql.SparkSession, dir: String) = {
+  private def coarseProbes(
+      s: org.apache.spark.sql.SparkSession, dir: String, cents: Array[Array[Float]]) = {
     import s.implicits._
-    val cents = centroidArray(s, dir)
     queryVectors(s, dir).toSeq.flatMap { case (qid, q) =>
       val ranked = cents.indices.map(i => (i.toLong, roundedCosine(q, cents(i))))
         .sortWith(graft.functions.VectorFunctions.probeBefore)
@@ -177,8 +182,9 @@ object SimilarityQueries {
     "s02_ann_ivf",
     (s, dir) => {
       import s.implicits._
-      val assigned = coarseAssign(s, dir)
-      val probes = coarseProbes(s, dir)
+      val cents = centroidArray(s, dir)
+      val assigned = coarseAssign(s, dir, cents)
+      val probes = coarseProbes(s, dir, cents)
       // search only the probed cells
       val wRank = Window.partitionBy($"q_id").orderBy($"cos_sim".desc, $"vec_id".asc)
       assigned.join(broadcast(probes), Seq("c_id"))
@@ -745,12 +751,14 @@ object SimilarityQueries {
     (s, dir) => {
       import s.implicits._
       val e = Tables.embeddings(s, dir)
-      val cb = graft.operators.ProductQuantizer
-        .fitCodebook(e, "embedding", "vec_id", PqM, PqK, dim = 64)
+      // centroids and codebook seeds are both first-n prefixes: one collect
+      val first = firstVecs(s, dir, math.max(NCENTROIDS, PqK))
+      val cents = first.take(NCENTROIDS)
+      val cb = graft.operators.ProductQuantizer.seedCodebook(first.take(PqK), PqM, dim = 64)
       // coarse cell + PQ codes in ONE projection pass over the corpus
       val enc = graft.operators.ProductQuantizer
-        .encode(coarseAssign(s, dir), "embedding", cb)
-      val probes = coarseProbes(s, dir).select($"q_id", $"c_id")
+        .encode(coarseAssign(s, dir, cents), "embedding", cb)
+      val probes = coarseProbes(s, dir, cents).select($"q_id", $"c_id")
       val q = e.filter($"vec_id" < NQ)
       graft.operators.ProductQuantizer
         .adcSearchCells(enc, "vec_id", "c_id", probes, q, "vec_id", "embedding", cb, PqTopK)
@@ -796,12 +804,12 @@ object SimilarityQueries {
     (s, dir) => {
       import s.implicits._
       val cents = centroidArray(s, dir)
-      val assigned = coarseAssign(s, dir)
+      val assigned = coarseAssign(s, dir, cents)
       val cb = graft.operators.ProductQuantizer
         .fitResidualCodebook(assigned, "embedding", "c_id", "vec_id", cents, PqM, PqK, dim = 64)
       val enc = graft.operators.ProductQuantizer
         .encodeResidual(assigned, "embedding", "c_id", cents, cb)
-      val probes = coarseProbes(s, dir).select($"q_id", $"c_id")
+      val probes = coarseProbes(s, dir, cents).select($"q_id", $"c_id")
       val q = Tables.embeddings(s, dir).filter($"vec_id" < NQ)
       graft.operators.ProductQuantizer
         .adcSearchCellsResidual(enc, "vec_id", "c_id", probes, q, "vec_id", "embedding",
@@ -1340,9 +1348,9 @@ object SimilarityQueries {
     * point (filter on `prn`).
     */
   private def coarseProbesRanked(
-      s: org.apache.spark.sql.SparkSession, dir: String, maxProbe: Int) = {
+      s: org.apache.spark.sql.SparkSession, dir: String, cents: Array[Array[Float]],
+      maxProbe: Int) = {
     import s.implicits._
-    val cents = centroidArray(s, dir)
     queryVectors(s, dir).toSeq.flatMap { case (qid, q) =>
       val ranked = cents.indices.map(i => (i.toLong, roundedCosine(q, cents(i))))
         .sortWith(graft.functions.VectorFunctions.probeBefore)
@@ -1377,8 +1385,9 @@ object SimilarityQueries {
       val exact = bruteForceRanked(s, dir)
         .select($"q_id", $"neighbor_id")
         .localCheckpoint(true) // the overlap join consumes it per sweep point
-      val assigned = coarseAssign(s, dir)
-      val probes = coarseProbesRanked(s, dir, SweepProbes.max)
+      val cents = centroidArray(s, dir)
+      val assigned = coarseAssign(s, dir, cents)
+      val probes = coarseProbesRanked(s, dir, cents, SweepProbes.max)
       // integer-micro scores (floor(round6 · 1e6 + 0.5), the s19/s20
       // ordering convention — strictly monotone on 6-dp-rounded
       // doubles, so the (cos desc, vec_id asc) rank order is EXACTLY
@@ -1624,13 +1633,10 @@ object SimilarityQueries {
         .repartition(s.sparkContext.defaultParallelism)
         .select($"vec_id",
           graft.functions.exprs.mat_vec_f($"embedding", R).as("embedding"))
-      val cents = centroidArray(s, dir).map(Opq.rotateVec(_, R))
-      val seeds = graft.operators.AnnIndex
-        .firstVectors(Tables.embeddings(s, dir), "embedding", "vec_id", PqK)
-        .map(v => Opq.rotateVec(v._2, R))
-      val sd = 64 / PqM
-      val cb = graft.operators.ProductQuantizer.Codebook(sd,
-        Array.tabulate(PqM)(j => seeds.map(_.slice(j * sd, (j + 1) * sd))))
+      // centroids and codebook seeds are both first-n prefixes: one collect
+      val first = firstVecs(s, dir, math.max(NCENTROIDS, PqK)).map(Opq.rotateVec(_, R))
+      val cents = first.take(NCENTROIDS)
+      val cb = graft.operators.ProductQuantizer.seedCodebook(first.take(PqK), PqM, dim = 64)
       // coarse cell + PQ codes in ONE projection pass over the rotated
       // corpus (s10's shape, rotation fused into the same stage)
       val assigned = rot.select($"vec_id", $"embedding",

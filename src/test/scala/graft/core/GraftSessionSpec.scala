@@ -1,9 +1,6 @@
 package graft.core
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
+import graft.SourceScan.mainCodeLines
 import graft.SparkSpec
 import graft.plans.{GraftExtensions, NativeKernelRule, RankLimitRule, TopKStrategy}
 
@@ -14,26 +11,9 @@ import graft.plans.{GraftExtensions, NativeKernelRule, RankLimitRule, TopKStrate
   */
 class GraftSessionSpec extends SparkSpec {
 
-  /** (path relative to `root`, line) for every non-comment line. */
-  private def codeLines(root: Path): Seq[(String, String)] = {
-    val walk = Files.walk(root)
-    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      .flatMap { f =>
-        Files.readAllLines(f).asScala
-          .filterNot { l =>
-            val t = l.trim
-            t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
-          }
-          .map(root.relativize(f).toString -> _)
-      }
-    finally walk.close()
-  }
-
   test("only the factory builds a session or installs the extensions in src/main") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath} is missing")
     val factory = "graft/core/GraftSession.scala"
-    val offenders = codeLines(root).collect {
+    val offenders = mainCodeLines().collect {
       case (file, line) if file != factory &&
         (line.contains(".builder()") || line.contains("GraftExtensions.install(")) =>
         s"$file: ${line.trim}"

@@ -222,9 +222,9 @@ class AsofJoinPropertySpec extends SparkSpec {
     }
   }
 
-  test("derived width census runs ONCE per input pair: memo hit, direction-blind") {
+  test("derived width census costs the same jobs on every call; explicit width none") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("asof-memo").toString
+    val dir = java.nio.file.Files.createTempDirectory("asof-census").toString
     Seq((1, 10L, 1L), (1, 95L, 2L)).toDF("k", "ts", "lv")
       .write.mode("overwrite").parquet(s"$dir/l")
     Seq((1, 5L, 10L, 7L), (1, 90L, 11L, 8L)).toDF("k", "ts", "tie", "rv")
@@ -249,31 +249,33 @@ class AsofJoinPropertySpec extends SparkSpec {
       n.get()
     }
 
-    AsofJoin.clearSpanMemo()
+    // no cross-call memo: every derived-width call pays its own census,
+    // in either direction, so no call can ever read a stale span
     val first = jobsDuring {
       AsofJoin.asofJoinSliced(l, r, Seq("k"), "ts", "tie")
     }
-    assert(first >= 1, "first derived-width call must run the census")
+    assert(first >= 1, "a derived-width call must run the census")
     val second = jobsDuring {
       AsofJoin.asofJoinSliced(l, r, Seq("k"), "ts", "tie")
     }
-    assert(second == 0, s"second call re-ran the census ($second jobs)")
-    // span is sign-invariant, so the forward read shares the memo too
+    assert(second == first, s"every call runs the census ($first then $second jobs)")
     val fwd = jobsDuring {
       AsofJoin.asofJoinSliced(l, r, Seq("k"), "ts", "tie",
         direction = "forward", tolerance = Some(1000L))
     }
-    assert(fwd == 0, s"forward direction re-ran the census ($fwd jobs)")
-
-    // rewriting the data under the SAME path must invalidate (PlanKey
-    // file digest), or a stale span would silently misconfigure widths
+    assert(fwd == first, s"forward direction runs the same census ($fwd jobs)")
+    // data rewritten under the SAME path is censused afresh
     Seq((1, 10L, 1L)).toDF("k", "ts", "lv")
       .write.mode("overwrite").parquet(s"$dir/l")
     val l2 = spark.read.parquet(s"$dir/l")
     val rewritten = jobsDuring {
       AsofJoin.asofJoinSliced(l2, r, Seq("k"), "ts", "tie")
     }
-    assert(rewritten >= 1, "rewritten input must miss the memo")
-    AsofJoin.clearSpanMemo()
+    assert(rewritten == first, s"rewritten input must be censused ($rewritten jobs)")
+    // an explicit width is a pure plan: nothing runs while building it
+    val explicit = jobsDuring {
+      AsofJoin.asofJoinSliced(l, r, Seq("k"), "ts", "tie", 10L)
+    }
+    assert(explicit == 0, s"explicit sliceWidth ran $explicit jobs")
   }
 }

@@ -97,19 +97,18 @@ class ProductQuantizerSpec extends SparkSpec {
     assert(arrR == flatR, "residual ADC array table diverges from the flat reference")
   }
 
-  test("AnnIndex memo serves repeat fits and clears per session") {
-    AnnIndex.clear(spark)
+  test("refits are deterministic, match the seed codebook, and differ by m") {
+    def codes(c: ProductQuantizer.Codebook) = c.codes.map(_.map(_.toSeq).toSeq).toSeq
     val first = ProductQuantizer.fitCodebook(vecs, "embedding", "vec_id", m = 2, k = 2, dim = 4)
     val again = ProductQuantizer.fitCodebook(vecs, "embedding", "vec_id", m = 2, k = 2, dim = 4)
-    assert(again eq first, "identical fit must serve from the session memo")
-    AnnIndex.clear(spark)
-    val fresh = ProductQuantizer.fitCodebook(vecs, "embedding", "vec_id", m = 2, k = 2, dim = 4)
-    assert(!(fresh eq first), "clear() must drop the memo (Bench relies on it per rep)")
-    assert(fresh.codes.map(_.map(_.toSeq).toSeq).toSeq ==
-      first.codes.map(_.map(_.toSeq).toSeq).toSeq, "refit must be deterministic")
-    // different params must not collide
+    assert(codes(again) == codes(first), "refit must be deterministic")
+    // the s10/s18 path: seeds collected once by the caller
+    val seeded = ProductQuantizer.seedCodebook(
+      AnnIndex.firstVectors(vecs, "embedding", "vec_id", 2).map(_._2), m = 2, dim = 4)
+    assert(codes(seeded) == codes(first), "seedCodebook must equal the unrefined fit")
     val other = ProductQuantizer.fitCodebook(vecs, "embedding", "vec_id", m = 1, k = 2, dim = 4)
-    assert(other.m == 1 && fresh.m == 2)
+    assert(other.m == 1 && first.m == 2)
+    assert(codes(other) != codes(first), "different m must give a different codebook")
   }
 
   test("a wrong-dimension NON-seed vector fails loudly in fit and encode") {
@@ -118,7 +117,6 @@ class ProductQuantizerSpec extends SparkSpec {
     // slice truncation in the Lloyd branch and both encode kernels)
     val short3 = (vecs.collect().map(r => (r.getLong(0), r.getSeq[Float](1))) :+
       (9L, Seq(1f, 2f))).toSeq.toDF("vec_id", "embedding")
-    AnnIndex.clear(spark)
     val fitErr = intercept[Exception] {
       ProductQuantizer.fitCodebook(short3, "embedding", "vec_id",
         m = 2, k = 2, dim = 4, refineIters = 1)

@@ -61,50 +61,44 @@ class TextDedupSpec extends SparkSpec {
     assert(cand.getDouble(2) == 1.0)
   }
 
-  test("sharedSignatures memo invalidates when files change under an unchanged path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sig_memo").toString
-    docs(1L -> "alpha beta gamma delta epsilon zeta")
-      .write.mode("overwrite").parquet(dir)
+  test("files appended under an unchanged path change signatures and candidates") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sig_append").toString
+    val text = "alpha beta gamma delta epsilon zeta"
+    docs(1L -> text).write.mode("overwrite").parquet(dir)
     def read() = spark.read.parquet(dir)
-    val first = TextDedup.sharedSignatures(read(), "doc_id", "text").count()
-    // same plan, same root path — but new files appended underneath;
-    // the inputFiles digest in the memo key must miss, not serve stale
-    // signatures that would let the new doc's duplicates survive dedup
-    docs(2L -> "eta theta iota kappa lambda mu")
-      .write.mode("append").parquet(dir)
-    val second = TextDedup.sharedSignatures(read(), "doc_id", "text").count()
-    assert(first == 1L && second == 2L,
-      s"appended docs must invalidate the signature memo (got $first then $second rows)")
+    def counts() = (TextDedup.minhashSignatures(read(), "doc_id", "text").count(),
+      TextDedup.minhashCandidates(read(), "doc_id", "text").count())
+    val first = counts()
+    // same plan, same root path — but a duplicate appended underneath;
+    // a stale signature frame would let it survive dedup
+    docs(2L -> text).write.mode("append").parquet(dir)
+    val second = counts()
+    assert(first == ((1L, 0L)) && second == ((2L, 1L)),
+      s"appended docs must reach signatures and candidates (got $first then $second)")
   }
 
-  test("sharedSignatures keys in-memory corpora by content digest, not identity") {
-    // two same-schema, same-cardinality local corpora: the memo must
-    // key on row CONTENT (md5 digest), never collapse them
-    val a = TextDedup.sharedSignatures(
+  test("distinct in-memory corpora give distinct signatures") {
+    // two same-schema, same-cardinality local corpora
+    val a = TextDedup.minhashSignatures(
       docs(1L -> "aa bb cc dd ee ff"), "doc_id", "text")
-    val b = TextDedup.sharedSignatures(
+    val b = TextDedup.minhashSignatures(
       docs(1L -> "gg hh ii jj kk ll"), "doc_id", "text")
     assert(a.collect().map(_.toSeq).toSeq != b.collect().map(_.toSeq).toSeq,
-      "distinct local corpora must not share a signature memo entry")
-    // ...while a re-built frame with identical content hits the memo
-    val a2 = TextDedup.sharedSignatures(
-      docs(1L -> "aa bb cc dd ee ff"), "doc_id", "text")
-    assert(a2 eq a, "identical local content must reuse the memoized frame")
+      "distinct local corpora must give distinct signatures")
   }
 
-  test("sharedSignatures never collapses two checkpointed corpora (LogicalRDD leaves)") {
+  test("distinct checkpointed corpora (LogicalRDD leaves) give distinct signatures") {
     // r20 regression: an RDD-backed leaf (localCheckpoint) has no path,
-    // no inputFiles, and a schema-only canonicalized plan — before
-    // PlanKey carried the RDD id, two different checkpointed corpora
-    // with the same schema collided on one memo key and served each
-    // other's signatures (a planted suite corpus flipped pipe02's
+    // no inputFiles, and a schema-only canonicalized plan — a memo keyed
+    // on plan identity once collided two such corpora and served one
+    // the other's signatures (a planted suite corpus flipped pipe02's
     // cluster stage in the shared test session)
-    val a = TextDedup.sharedSignatures(
+    val a = TextDedup.minhashSignatures(
       docs(1L -> "aa bb cc dd ee ff").localCheckpoint(), "doc_id", "text")
-    val b = TextDedup.sharedSignatures(
+    val b = TextDedup.minhashSignatures(
       docs(1L -> "gg hh ii jj kk ll").localCheckpoint(), "doc_id", "text")
     assert(a.collect().map(_.toSeq).toSeq != b.collect().map(_.toSeq).toSeq,
-      "distinct checkpointed corpora must not share a signature memo entry")
+      "distinct checkpointed corpora must give distinct signatures")
   }
 
   test("containmentPairs surfaces a low-Jaccard containment pair Jaccard dedup misses") {
