@@ -1351,8 +1351,7 @@ object PqExprImpl {
         xc += vec.getFloat(start + k).toDouble * c(k).toDouble
         k += 1
       }
-      val d = java.math.BigDecimal.valueOf((xx - 2.0 * xc) + cc)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+      val d = VectorFunctions.roundHalfUp((xx - 2.0 * xc) + cc, 6)
       if (d < bestD) { bestD = d; best = ci }
       ci += 1
     }
@@ -1395,8 +1394,7 @@ object PqExprImpl {
         val m = math.min(n, c.length)
         var k = 0
         while (k < m) { xc += vec.getFloat(k).toDouble * c(k).toDouble; k += 1 }
-        val cos = java.math.BigDecimal.valueOf(xc / den)
-          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+        val cos = VectorFunctions.roundHalfUp(xc / den, 6)
         if (best == -1 || cos > bestCos) { best = ci; bestCos = cos }
       }
       ci += 1
@@ -1443,8 +1441,7 @@ object PqExprImpl {
       val m = math.min(sliceLen, c.length)
       var k = 0
       while (k < m) { xc += r(k).toDouble * c(k).toDouble; k += 1 }
-      val d = java.math.BigDecimal.valueOf((xx - 2.0 * xc) + cc)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+      val d = VectorFunctions.roundHalfUp((xx - 2.0 * xc) + cc, 6)
       if (d < bestD) { bestD = d; best = ci }
       ci += 1
     }

@@ -36,18 +36,29 @@ object VectorFunctions {
     * rest on both sides ranking with identical math (r9 ADVICE).
     */
   def roundedCosine(a: Array[Float], b: Array[Float]): Option[Double] = {
-    def dotF(x: Array[Float], y: Array[Float]): Double = {
-      val n = math.min(x.length, y.length)
-      var s = 0.0
-      var i = 0
-      while (i < n) { s += x(i).toDouble * y(i).toDouble; i += 1 }
-      s
-    }
     val den = math.sqrt(dotF(a, a)) * math.sqrt(dotF(b, b))
     if (den == 0.0) None
-    else Some(java.math.BigDecimal.valueOf(dotF(a, b) / den)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue())
+    else Some(roundHalfUp(dotF(a, b) / den, 6))
   }
+
+  /** The codegen kernel's dot (`VectorExprImpl.dotF`) over driver
+    * arrays: the same sequential float→double accumulation.
+    */
+  def dotF(x: Array[Float], y: Array[Float]): Double = {
+    val n = math.min(x.length, y.length)
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += x(i).toDouble * y(i).toDouble; i += 1 }
+    s
+  }
+
+  /** Spark `round(x, scale)` on a double, replicated outside Spark:
+    * the double's decimal string rounded HALF_UP, as `RoundBase` does.
+    * Unlike Spark's `round`, NaN and ±Inf throw instead of passing
+    * through. The one copy every driver or kernel replica uses.
+    */
+  def roundHalfUp(x: Double, scale: Int): Double =
+    java.math.BigDecimal.valueOf(x).setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** Probe-ranking order over (cellId, roundedCosine) candidates:
     * similarity DESC, NULLS (zero-norm) LAST, cell id ASC on ties —

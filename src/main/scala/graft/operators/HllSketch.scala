@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorFunctions.roundHalfUp
+
 /** HyperLogLog distinct-count sketch (Flajolet et al. 2007) made
   * ENGINE-PORTABLE — the property the sketch family note in
   * [[KmvSketch]] said HLL lacks. Stock HLL implementations differ per
@@ -57,8 +59,7 @@ object HllSketch {
     * here and embedded as literals on both engines.
     */
   val LcTable: IndexedSeq[Double] = (1 to M).map { v =>
-    java.math.BigDecimal.valueOf(M.toDouble * math.log(M.toDouble / v))
-      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+    roundHalfUp(M.toDouble * math.log(M.toDouble / v), 4)
   }
 
   import org.apache.spark.sql.Column

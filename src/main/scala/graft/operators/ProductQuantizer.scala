@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions.dot
+import graft.functions.VectorFunctions.{dot, dotF, roundHalfUp}
 
 /** Product quantization (PQ) for embedding columns — the memory-bound
   * ANN scale path past IVF (s02): the vector is split into `m`
@@ -129,19 +129,11 @@ object ProductQuantizer {
   /** [[subDist]] evaluated driver-side with bit-identical arithmetic:
     * the same sequential float→double dot accumulation as the codegen
     * kernel (`VectorExprImpl.dotF`), the same (x·x − 2x·c) + c² term
-    * order, and Spark `round`'s HALF_UP BigDecimal rounding.
+    * order, and Spark `round`'s HALF_UP rounding ([[roundHalfUp]]).
     */
   private def roundedSubDist(xs: Array[Float], c: Array[Float]): Double = {
-    def dot(a: Array[Float], b: Array[Float]): Double = {
-      val n = math.min(a.length, b.length)
-      var s = 0.0
-      var i = 0
-      while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-      s
-    }
     val c2 = c.map(x => x.toDouble * x.toDouble).sum
-    java.math.BigDecimal.valueOf(dot(xs, xs) - 2.0 * dot(xs, c) + c2)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    roundHalfUp(dotF(xs, xs) - 2.0 * dotF(xs, c) + c2, 6)
   }
 
   /** ADC lookup table: one row per (query, subspace, code) with the

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
+import graft.functions.VectorFunctions.roundHalfUp
+
 /** Mergeable per-group quantile estimation from a DETERMINISTIC
   * bottom-k-by-hash sample — the quantile member of the portable
   * sketch family (CMS q41, KMV q42/q43, HLL q53). Production quantile
@@ -120,9 +122,7 @@ object SampleQuantiles {
         val klo = math.floor(pos).toInt
         val frac = pos - math.floor(pos)
         val khi = math.min(klo + 1, n - 1)
-        val q = java.math.BigDecimal
-          .valueOf(vs(klo) + (vs(khi) - vs(klo)) * frac)
-          .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+        val q = roundHalfUp(vs(klo) + (vs(khi) - vs(klo)) * frac, 4)
         org.apache.spark.sql.Row(g, p, q)
       }
     }

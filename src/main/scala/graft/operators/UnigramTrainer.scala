@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.wsTokens
+import graft.functions.VectorFunctions.roundHalfUp
 
 /** Unigram-LM tokenizer training (Kudo 2018, the SentencePiece
   * unigram model) — the other tokenizer family in production use
@@ -19,8 +20,8 @@ import graft.functions.TextFunctions.wsTokens
   * renormalizes expected counts. The whole fit is replayable in the
   * DuckDB oracle (t26) because every FP step is deterministic by
   * construction:
-  *  - piece probabilities are rounded to 6 dp before every round
-  *    (through Spark's `round`, the engine-pairing t14 established);
+  *  - piece probabilities are rounded to 6 dp before every round, on
+  *    the driver by Spark `round`'s replica (the t14 engine-pairing);
   *  - the lattice DPs use only IEEE +/·/÷ in a FIXED accumulation
   *    order (increasing split position; no logs, no re-association),
   *    so alphas/betas are bit-identical across engines;
@@ -29,11 +30,11 @@ import graft.functions.TextFunctions.wsTokens
   *    expected counts are exact bigints, summation-order-free.
   *
   * Scale shape (BpeTrainer's): the corpus-sized work is ONE token
-  * census (explode → groupBy word); every EM round runs one kernel
-  * call per DISTINCT word ([[graft.functions.UnigramEm]], model as
-  * driver-side state — plan O(1) nodes at any vocab) plus a
-  * vocab-sized integer aggregate; the M-step collects the model-sized
-  * count table (the KMeans-centroid pattern). Micro-quantization
+  * census (explode → groupBy word), one top-N collect of its
+  * substring census for the seed, and per EM round one kernel call
+  * per DISTINCT word ([[graft.functions.UnigramEm]], model as
+  * driver-side state) plus a vocab-sized integer aggregate whose
+  * collected count table the driver renormalizes. Micro-quantization
   * headroom: expected-count sums reach ~1e6 micro-units per corpus
   * token, so bigint overflow needs ~9e12 tokens — at the 100 TB scale
   * drop the quantum to 1e4 or shard the M-step sum.
@@ -50,13 +51,16 @@ object UnigramTrainer {
   val MaxWord = 12
   val SeedMulti = 48
 
+  private val WordPattern = "^[A-Za-z0-9]+$"
+  private val SingleChars = 62 // WordPattern's alphabet: the single-char pieces
+
   final case class PieceStat(piece: String, em_prob: Double, vit_count: Long)
 
   /** Distinct-word frequency table over alphanumeric tokens. */
   private def wordTable(docs: DataFrame, textCol: String): DataFrame =
     docs
       .select(explode(wsTokens(col(textCol))).as("w"))
-      .filter(col("w").rlike("^[A-Za-z0-9]+$") && length(col("w")) <= MaxWord)
+      .filter(col("w").rlike(WordPattern) && length(col("w")) <= MaxWord)
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
 
   /** Occurrence-weighted substring census (lengths 1..4): the seed
@@ -71,28 +75,29 @@ object UnigramTrainer {
                 ln -> substring(w, st, ln))))""")).as("piece"))
       .groupBy(col("piece")).agg(sum(col("freq")).as("cnt"))
 
-  /** The seed vocabulary: every single char + top-[[SeedMulti]]
-    * multi-char substrings, with occurrence counts.
+  /** The seed vocabulary in pid order (by piece) with occurrence
+    * counts: every single char + the top-[[SeedMulti]] multi-char
+    * substrings by (cnt desc, piece asc). One top-N collect: single
+    * chars sort first and number at most [[SingleChars]]. Pieces are
+    * ASCII, so the driver's String order is Spark's binary order.
     */
-  private def seedTable(words: DataFrame): DataFrame = {
-    val subs = substringCensus(words)
-    subs.filter(length(col("piece")) === 1)
-      .unionByName(subs.filter(length(col("piece")) >= 2)
-        .orderBy(col("cnt").desc, col("piece").asc)
-        .limit(SeedMulti))
+  private def seedTable(words: DataFrame): Seq[(String, Long)] = {
+    val (singles, multi) = substringCensus(words)
+      .orderBy((length(col("piece")) >= 2).asc, col("cnt").desc, col("piece").asc)
+      .limit(SingleChars + SeedMulti)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      .partition(_._1.length == 1)
+    (singles ++ multi.take(SeedMulti)).sortBy(_._1)
   }
 
-  /** Renormalize a (piece, cnt) table into 6-dp probabilities through
-    * Spark's own `round` (the DuckDB-pairing the t14 contract uses) —
-    * model-sized frame, collected for the next round's kernel.
+  /** Renormalize model-sized counts into 6-dp probabilities on the
+    * driver: Spark's `round(cnt / tot, 6)` (the DuckDB pairing the t14
+    * contract uses) replicated bit for bit — a long/long → double
+    * divide, then [[roundHalfUp]]. No counts (no words), no model.
     */
-  private def normalized(counts: Seq[(String, Long)], spark: org.apache.spark.sql.SparkSession)
-      : Seq[(String, Double)] = {
-    import spark.implicits._
-    val df = counts.toDF("piece", "cnt")
-    df.crossJoin(broadcast(df.agg(sum(col("cnt")).as("tot"))))
-      .select(col("piece"), round(col("cnt") / col("tot"), 6).as("p"))
-      .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+  private def normalized(cnts: Seq[Long]): Array[Double] = {
+    val tot = cnts.sum.toDouble
+    cnts.map(c => roundHalfUp(c.toDouble / tot, 6)).toArray
   }
 
   /** Fit the unigram model with `rounds` EM iterations and Viterbi-
@@ -105,13 +110,8 @@ object UnigramTrainer {
     import spark.implicits._
     val words = wordTable(docs, textCol).localCheckpoint(true)
     val seed = seedTable(words)
-      .orderBy(col("piece").asc)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     val pieces = seed.map(_._1).toArray
-    var probs = {
-      val p = normalized(seed, spark).toMap
-      pieces.map(p)
-    }
+    var probs = normalized(seed.map(_._2))
     var r = 0
     while (r < rounds) {
       val cnts = words
@@ -120,9 +120,7 @@ object UnigramTrainer {
         .groupBy(col("e.pid").as("pid"))
         .agg(sum(col("e.micro") * col("freq")).as("cnt"))
         .collect().map(row => row.getInt(0) -> row.getLong(1)).toMap
-      val p = normalized(
-        pieces.indices.map(i => (pieces(i), cnts.getOrElse(i, 0L))).toSeq, spark).toMap
-      probs = pieces.map(p)
+      probs = normalized(pieces.indices.map(cnts.getOrElse(_, 0L)))
       r += 1
     }
     val vit = words

@@ -1281,12 +1281,12 @@ object TextQueries {
 
   /** t26: Unigram-LM (SentencePiece, Kudo 2018) tokenizer training —
     * the other production tokenizer family beside BPE (t16/t24):
-    * seed an over-complete substring vocabulary, fit piece
-    * probabilities with [[graft.operators.UnigramTrainer]]'s exact
-    * soft EM (forward/backward lattice marginals, micro-quantized
-    * expected counts), Viterbi-encode the corpus under the final
-    * model. Output: one row per seed piece with its post-EM
-    * probability and corpus Viterbi usage count.
+    * seed an over-complete substring vocabulary (one top-N collect),
+    * fit piece probabilities with [[graft.operators.UnigramTrainer]]'s
+    * exact soft EM (lattice marginals, micro-quantized expected counts,
+    * 6-dp renormalization on the driver), Viterbi-encode the corpus
+    * under the final model. Output: one row per seed piece with its
+    * post-EM probability and corpus Viterbi usage count.
     *
     * The DuckDB oracle replays the ENTIRE fit — substring seed census,
     * both lattice DPs as unrolled guarded CTE levels (t16's

@@ -34,4 +34,20 @@ abstract class SparkSpec extends AnyFunSuite {
     getClass.getResource(s"/fixtures/$name").getPath
 
   def sfDir: String = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `body` runs. Listener delivery is async;
+    * counted jobs are BLOCKING inside body (eager collects and
+    * checkpoints), so a short settle window after it returns is enough.
+    */
+  def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { body; Thread.sleep(300) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    n.get()
+  }
 }

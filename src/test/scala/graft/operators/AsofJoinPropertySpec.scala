@@ -234,21 +234,6 @@ class AsofJoinPropertySpec extends SparkSpec {
 
     // the census is a blocking head() at PLAN-BUILD time, so jobs
     // launched while CONSTRUCTING the frame count it directly
-    def jobsDuring(body: => Unit): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          n.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      // listener delivery is async; the census job is BLOCKING inside
-      // body, so a short settle window after it returns is enough
-      try { body; Thread.sleep(300) }
-      finally spark.sparkContext.removeSparkListener(listener)
-      n.get()
-    }
-
     // no cross-call memo: every derived-width call pays its own census,
     // in either direction, so no call can ever read a stale span
     val first = jobsDuring {

@@ -59,6 +59,48 @@ class UnigramTrainerSpec extends SparkSpec {
       s"viterbi counts: $out")
   }
 
+  test("the seed is every single char plus the top SeedMulti multi-char substrings") {
+    // all 62 word chars in 12-char words (every substring of those ties
+    // at count 1), plus repeated words that lift a few substrings above
+    // the tie; punctuation tokens are not words
+    val alphabet = ('a' to 'z') ++ ('A' to 'Z') ++ ('0' to '9')
+    val words = alphabet.grouped(UnigramTrainer.MaxWord).map(_.mkString).toSeq ++
+      Seq("hello", "hello", "hello", "help", "help", "world", "word", "ab")
+    val corpus = words.zipWithIndex.map { case (w, i) => (i.toLong, s"$w !! -- a-b") }
+      .toDF("doc_id", "text")
+
+    val census = words.flatMap { w =>
+      for {
+        st <- w.indices
+        ln <- 1 to math.min(graft.functions.UnigramImpl.MaxPiece, w.length - st)
+      } yield w.substring(st, st + ln)
+    }.groupBy(identity).map { case (piece, occ) => piece -> occ.size.toLong }
+    val multi = census.toSeq.filter(_._1.length >= 2).sortBy { case (p, c) => (-c, p) }
+    val k = UnigramTrainer.SeedMulti
+    assert(alphabet.forall(c => census.contains(c.toString)))
+    assert(multi.size > k && multi(k - 1)._2 == multi(k)._2,
+      s"the fixture must tie at the cut: ${multi.slice(k - 2, k + 2)}")
+    val expected = census.keySet.filter(_.length == 1) ++ multi.take(k).map(_._1)
+
+    val out = UnigramTrainer.train(corpus, "text", rounds = 1).collect().map(_.getString(0))
+    assert(out.toSeq == expected.toSeq.sorted, "seed pieces in pid (piece) order")
+  }
+
+  test("two EM rounds on the sf0.01 documents run at most 10 jobs") {
+    val docs = graft.core.Tables.documents(
+      spark, java.nio.file.Paths.get(sfDir).resolveSibling("sf0.01").toString)
+    // word census checkpoint, seed top-N collect, one collect per round
+    // and the Viterbi collect (2 jobs each under AQE); normalization
+    // runs on the driver
+    val jobs = jobsDuring { UnigramTrainer.train(docs, "text", rounds = 2) }
+    assert(jobs <= 10, s"train(rounds = 2) ran $jobs jobs")
+  }
+
+  test("a corpus without alphanumeric words trains to an empty model") {
+    val corpus = Seq((1L, "!! ... --"), (2L, "? a-b")).toDF("doc_id", "text")
+    assert(UnigramTrainer.train(corpus, "text", rounds = 2).collect().isEmpty)
+  }
+
   test("EM keeps a normalized model and Viterbi covers the corpus (real corpus)") {
     val docs = graft.core.Tables.documents(spark, sfDir)
     val out = UnigramTrainer.train(docs, "text", rounds = 2).collect()
