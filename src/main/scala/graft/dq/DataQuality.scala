@@ -1,14 +1,30 @@
 package graft.dq
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's EDA/data-quality suite (21_EDA.ipynb) as reusable
   * checks. Every check is a distributed plan — the only driver-side
   * values are the final scalar metrics, mirroring the reference's
   * collected counters.
+  *
+  * The per-run summary (`measure`, `summary`) is two actions, not one
+  * per check. The first is the `approxQuantile` call behind
+  * `iqrBounds`, so the fences are the per-check ones. The second is
+  * one aggregate over each input, cross-joined into one row: every
+  * count, and the outlier count against those fences. The quartiles
+  * stay out of that aggregate on purpose: next to the
+  * `countDistinct`s, Spark's distinct rewrite groups them with many
+  * keys, the object hash aggregate falls back to sort-based
+  * aggregation and merges partial digests in another order, and the
+  * quartiles move (they did on all six generated BLS sources tried,
+  * e.g. Q1 −0.4 → −0.5). A third, distinct-free aggregate would keep
+  * them but read the BLS file once more.
   */
 object DataQuality {
+
+  /** Relative error of the IQR quartiles (21_EDA.ipynb:2309-2312). */
+  private val IqrRelErr = 0.01
 
   /** Full-row duplicate count (21_EDA.ipynb:657-658):
     * total − dropDuplicates.
@@ -87,11 +103,26 @@ object DataQuality {
     * as literals into the outlier filter — this is semantics, not an
     * optimization shortcut (SURVEY.md §4).
     */
-  def iqrBounds(df: DataFrame, c: String, relErr: Double = 0.01): (Double, Double) = {
-    val Array(q1, q3) = df.stat.approxQuantile(c, Array(0.25, 0.75), relErr)
-    val iqr = q3 - q1
-    (q1 - 1.5 * iqr, q3 + 1.5 * iqr)
-  }
+  def iqrBounds(df: DataFrame, c: String, relErr: Double = IqrRelErr): (Double, Double) =
+    iqrFences(df, c, relErr).getOrElse(
+      throw new IllegalArgumentException(s"no quartiles: $c has no non-NaN value"))
+
+  /** Tukey's fences, 1.5 IQR below Q1 and above Q3, from
+    * `approxQuantile`'s quartiles; None when `c` has no non-NaN value.
+    */
+  private def iqrFences(df: DataFrame, c: String, relErr: Double): Option[(Double, Double)] =
+    df.stat.approxQuantile(c, Array(0.25, 0.75), relErr) match {
+      case Array(q1, q3) =>
+        val iqr = q3 - q1
+        Some((q1 - 1.5 * iqr, q3 + 1.5 * iqr))
+      case _ => None
+    }
+
+  /** Every column of `df` as one struct: counting its distinct values
+    * counts distinct rows as `dropDuplicates` does, nulls included.
+    */
+  private def wholeRow(df: DataFrame): Column =
+    struct(df.columns.map(c => col(s"`$c`")).toSeq: _*)
 
   /** Outlier rows outside the IQR bounds, largest |value| first
     * (21_EDA.ipynb:2314-2318).
@@ -103,31 +134,62 @@ object DataQuality {
       .limit(limit)
   }
 
+  /** The run's DQ metrics in two actions (see the object scaladoc).
+    * Inputs without a non-NaN `value` have no quartiles, so no fences
+    * and no outliers.
+    */
+  def measure(bls: DataFrame, population: DataFrame): DqRun = {
+    val value = col("value")
+    val outside = iqrFences(bls, "value", IqrRelErr)
+      .fold(lit(false)) { case (lo, hi) => value < lo || value > hi }
+    val blsAgg = bls.agg(
+      count(lit(1)).as("bls_rows"),
+      countDistinct(col("series_id")).as("bls_distinct_series_id"),
+      countDistinct(col("year")).as("bls_distinct_years"),
+      countDistinct(wholeRow(bls)).as("bls_distinct_rows"),
+      count_if(value < 0).as("bls_negative_values"),
+      count_if(col("series_id").isNull || col("year").isNull ||
+        col("period").isNull || value.isNull).as("bls_null_critical_rows"),
+      count_if(outside).as("bls_outlier_rows_iqr"))
+    val popAgg = population.agg(
+      count(lit(1)).as("population_rows"),
+      countDistinct(col("Year")).as("population_distinct_years"),
+      countDistinct(wholeRow(population)).as("population_distinct_rows"),
+      count_if(col("Population") <= 0).as("population_non_positive_values"))
+    // The hint plans a cartesian product of the two one-row aggregates
+    // instead of broadcasting one of them in a job of its own.
+    val m = blsAgg.hint("shuffle_replicate_nl").crossJoin(popAgg).head()
+    def long(c: String): Long = m.getAs[Long](c)
+
+    DqRun(
+      DqSummary(
+        bls_rows = long("bls_rows"),
+        bls_distinct_series_id = long("bls_distinct_series_id"),
+        bls_distinct_years = long("bls_distinct_years"),
+        bls_full_row_duplicates = long("bls_rows") - long("bls_distinct_rows"),
+        population_rows = long("population_rows"),
+        population_distinct_years = long("population_distinct_years"),
+        population_full_row_duplicates =
+          long("population_rows") - long("population_distinct_rows"),
+        bls_negative_values = long("bls_negative_values"),
+        population_non_positive_values = long("population_non_positive_values"),
+        bls_outlier_rows_iqr = long("bls_outlier_rows_iqr"),
+        run_utc = java.time.Instant.now().toString),
+      blsNullCriticalRows = long("bls_null_critical_rows"))
+  }
+
   /** The one-row DQ summary the reference appends to
     * `dq_summary_runlog` per run (21_EDA.ipynb:33297-33367).
     */
-  def summary(spark: SparkSession, bls: DataFrame, population: DataFrame): DataFrame = {
-    import spark.implicits._
-    val blsRows = bls.count()
-    val popRows = population.count()
-    val m = DqSummary(
-      bls_rows = blsRows,
-      bls_distinct_series_id = bls.select("series_id").distinct().count(),
-      bls_distinct_years = bls.select("year").distinct().count(),
-      bls_full_row_duplicates = fullRowDuplicates(bls),
-      population_rows = popRows,
-      population_distinct_years = population.select("Year").distinct().count(),
-      population_full_row_duplicates = fullRowDuplicates(population),
-      bls_negative_values = countWhere(bls, col("value") < 0),
-      population_non_positive_values = countWhere(population, col("Population") <= 0),
-      bls_outlier_rows_iqr = {
-        val (lo, hi) = iqrBounds(bls, "value")
-        countWhere(bls, col("value") < lo || col("value") > hi)
-      },
-      run_utc = java.time.Instant.now().toString)
-    Seq(m).toDF()
-  }
+  def summary(spark: SparkSession, bls: DataFrame, population: DataFrame): DataFrame =
+    spark.createDataFrame(Seq(measure(bls, population).summary))
 }
+
+/** One run's DQ metrics: the run-log row, plus the count of BLS rows
+  * with a null critical field, which `Pipeline.validate` gates on and
+  * the run log does not carry.
+  */
+final case class DqRun(summary: DqSummary, blsNullCriticalRows: Long)
 
 /** Schema of the append-only DQ run log (one wide row per run). */
 final case class DqSummary(

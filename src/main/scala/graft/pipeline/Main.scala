@@ -42,7 +42,8 @@ final class LocalDirFetcher(sourceDir: String, apiFileName: String = "population
 
 /** CLI entry point: run the full reference-shaped pipeline (BLS mirror
   * sync ∥ population ingest → analytics + DQ) against a local source
-  * directory.
+  * directory, then print the ingest reports, the DQ row's counts and
+  * the published tables.
   *
   * Usage: runMain graft.pipeline.Main <sourceDir> <workDir> [database]
   */
@@ -69,6 +70,11 @@ object Main {
       s"skipped=${report.blsSync.skipped} deleted=${report.blsSync.deleted}")
     println(s"population: mode=${report.populationIngest.mode.getOrElse("?")} " +
       s"rows=${report.populationIngest.rows.getOrElse(-1)}")
+    val dq = report.dq
+    println(dq.productElementNames.zip(dq.productIterator)
+      .filterNot(_._1 == "run_utc")
+      .map { case (k, v) => s"$k=$v" }
+      .mkString("dq: ", " ", ""))
     report.publishedTables.foreach { t =>
       println(s"published $t rows=${spark.table(t).count()}")
     }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analytics.Analytics
-import graft.dq.DataQuality
+import graft.dq.{DataQuality, DqRun, DqSummary}
 import graft.ingest._
 import graft.parse.PopulationParser
 
@@ -16,6 +16,11 @@ import graft.parse.PopulationParser
   * (population API ingest) → Task C (analytics + DQ). The Databricks
   * Workflow dependency edge becomes two `Future`s awaited before the
   * analytics stage; each stage returns its typed run report.
+  *
+  * Task C is bound by rounds of one-task jobs, not by data, so its
+  * independent rounds overlap too: the three table writes and the DQ
+  * metrics run as four `Future`s on the caller's `ExecutionContext`
+  * (see `runAnalytics`).
   */
 final case class PipelineConfig(
     blsSource: String,
@@ -30,7 +35,8 @@ final case class PipelineConfig(
 final case class PipelineReport(
     blsSync: BlsRunMeta,
     populationIngest: PopulationRunMeta,
-    publishedTables: Seq[String])
+    publishedTables: Seq[String],
+    dq: DqSummary)
 
 /** Publish sinks (K1/K2): parquet saveAsTable with the reference's
   * overwrite / append semantics (Delta jars are absent in this
@@ -130,10 +136,33 @@ object Pipeline {
     (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
   }
 
+  /** The curated tables `runAnalytics` publishes into `database`:
+    * Req A, B and C.
+    */
+  def publishedTables(database: String): Seq[String] =
+    Seq("population_stats_2013_2018", "bls_best_year_by_series", "report_prs30006032_q01")
+      .map(t => s"$database.$t")
+
   /** Task C: parse the raw zone, publish the three curated tables,
     * append the DQ run log, validate (20_analytics.ipynb cell 14).
+    * Returns the DQ row it appended.
+    *
+    * The three overwrites and the DQ metrics (`DataQuality.measure`)
+    * are independent, so they run concurrently as `Future`s on `ec`:
+    * at the reference's input size their jobs are one task each, and
+    * the cores would otherwise sit idle. Their Spark jobs carry the
+    * local properties (job group, scheduler pool) of the pool threads,
+    * not the caller's. Once all four have finished, the DQ row is
+    * appended and `validate` runs on the counts the metrics hold.
+    *
+    * Failure: the first failed round, in the order writes then
+    * metrics, is rethrown after every round has finished, so nothing
+    * is still writing when this throws. The other writes may already
+    * have landed, and no DQ row is appended. A run that fails
+    * `validate` has appended its DQ row, which records the bad input.
     */
-  def runAnalytics(spark: SparkSession, config: PipelineConfig): Seq[String] = {
+  def runAnalytics(spark: SparkSession, config: PipelineConfig)(
+      implicit ec: ExecutionContext): DqSummary = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS ${config.database}")
     val db = config.database
 
@@ -143,35 +172,35 @@ object Pipeline {
       .load(s"${config.blsTargetDir}/${config.blsFileName}")
     val population = PopulationParser.parseFile(spark, config.populationTargetPath)
 
-    val tables = Seq(
-      s"$db.population_stats_2013_2018" -> Analytics.populationStats(population),
-      s"$db.bls_best_year_by_series" -> Analytics.bestYearBySeries(bls),
-      s"$db.report_prs30006032_q01" -> Analytics.reportSeriesQ01(bls, population))
-    tables.foreach { case (name, df) => TableSink.overwrite(df, name) }
+    val tables @ Seq(stats, best, report) = publishedTables(db)
+    val writes = Seq(
+      stats -> Analytics.populationStats(population),
+      best -> Analytics.bestYearBySeries(bls),
+      report -> Analytics.reportSeriesQ01(bls, population))
+      .map { case (name, df) => Future(TableSink.overwrite(df, name)) }
+    val metrics = Future(DataQuality.measure(bls, population))
+    val rounds = writes :+ metrics
+    rounds.foreach(Await.ready(_, Duration.Inf))
+    rounds.foreach(_.value.get.get) // rethrows the first failure
+    val dq = metrics.value.get.get
 
-    TableSink.append(DataQuality.summary(spark, bls, population), s"$db.dq_summary_runlog")
-
-    validate(spark, bls, population, tables.map(_._1))
-    tables.map(_._1)
+    TableSink.append(spark.createDataFrame(Seq(dq.summary)), s"$db.dq_summary_runlog")
+    validate(spark, dq, tables)
+    dq.summary
   }
 
   /** Inline validation (20_analytics.ipynb:3108-3172): non-empty
     * inputs, zero rows with null critical fields (hard failure), all
-    * output tables resolvable.
+    * output tables in the catalog. Reads the counts `dq` holds and
+    * issues no Spark job.
     */
-  def validate(
-      spark: SparkSession,
-      bls: DataFrame,
-      population: DataFrame,
-      outputTables: Seq[String]): Unit = {
-    require(bls.count() > 0, "BLS parse produced 0 rows")
-    require(population.count() > 0, "population parse produced 0 rows")
-    val badBls = bls.where(
-      col("series_id").isNull || col("year").isNull ||
-        col("period").isNull || col("value").isNull).count()
-    if (badBls != 0)
-      throw new RuntimeException(s"$badBls BLS rows with null critical fields")
-    outputTables.foreach(t => require(spark.table(t) != null, s"missing output table $t"))
+  def validate(spark: SparkSession, dq: DqRun, outputTables: Seq[String]): Unit = {
+    require(dq.summary.bls_rows > 0, "BLS parse produced 0 rows")
+    require(dq.summary.population_rows > 0, "population parse produced 0 rows")
+    if (dq.blsNullCriticalRows != 0)
+      throw new RuntimeException(s"${dq.blsNullCriticalRows} BLS rows with null critical fields")
+    outputTables.foreach(t =>
+      require(spark.catalog.tableExists(t), s"missing output table $t"))
   }
 
   def run(
@@ -180,7 +209,7 @@ object Pipeline {
       store: FileStore,
       config: PipelineConfig)(implicit ec: ExecutionContext): PipelineReport = {
     val (blsMeta, popMeta) = runIngest(fetcher, store, config)
-    val tables = runAnalytics(spark, config)
-    PipelineReport(blsMeta, popMeta, tables)
+    val dq = runAnalytics(spark, config)
+    PipelineReport(blsMeta, popMeta, publishedTables(config.database), dq)
   }
 }

@@ -1,6 +1,7 @@
 package graft.dq
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.parse.{BlsParser, PopulationParser}
@@ -63,5 +64,75 @@ class DataQualitySpec extends SparkSpec {
     assert(r.getAs[Long]("bls_rows") == 16)
     assert(r.getAs[Long]("population_rows") == 10)
     assert(r.getAs[Long]("bls_distinct_series_id") == 3)
+  }
+
+  /** The summary as the per-check helpers compute it, one action each. */
+  private def perCheck(bls: DataFrame, population: DataFrame): DqSummary = {
+    val (lo, hi) = DataQuality.iqrBounds(bls, "value")
+    DqSummary(
+      bls_rows = bls.count(),
+      bls_distinct_series_id = bls.select("series_id").distinct().count(),
+      bls_distinct_years = bls.select("year").distinct().count(),
+      bls_full_row_duplicates = DataQuality.fullRowDuplicates(bls),
+      population_rows = population.count(),
+      population_distinct_years = population.select("Year").distinct().count(),
+      population_full_row_duplicates = DataQuality.fullRowDuplicates(population),
+      bls_negative_values = DataQuality.countWhere(bls, col("value") < 0),
+      population_non_positive_values = DataQuality.countWhere(population, col("Population") <= 0),
+      bls_outlier_rows_iqr = DataQuality.countWhere(bls, col("value") < lo || col("value") > hi),
+      run_utc = "")
+  }
+
+  private def assertSummaryMatchesChecks(bls: DataFrame, population: DataFrame): DqSummary = {
+    val got = DataQuality.summary(spark, bls, population).as[DqSummary].head().copy(run_utc = "")
+    assert(got == perCheck(bls, population))
+    got
+  }
+
+  test("summary equals the per-check helpers on the fixture") {
+    val got = assertSummaryMatchesChecks(bls, population)
+    assert(got.bls_outlier_rows_iqr > 0 && got.bls_negative_values == 7)
+  }
+
+  test("summary equals the per-check helpers on planted duplicates, NaN, negatives and nulls") {
+    val planted = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row("PLANT_NAN", 2000, "Q01", Double.NaN),
+      Row("PLANT_NEG", 2001, "Q02", -5.0),
+      Row("PLANT_BIG", 2002, "Q03", 1.0e6),
+      Row("PLANT_NULL", 2003, null, 1.0))), bls.schema)
+    val plantedBls = bls.union(bls.limit(1)).union(planted)
+    val plantedPop = population.union(population.limit(1)).union(
+      Seq((2030, 0.0), (2031, -1.0)).toDF("Year", "Population"))
+    val got = assertSummaryMatchesChecks(plantedBls, plantedPop)
+    assert(got.bls_full_row_duplicates == 1 && got.population_full_row_duplicates == 1)
+    assert(got.bls_negative_values == 8 && got.population_non_positive_values == 2)
+    assert(DataQuality.measure(plantedBls, plantedPop).blsNullCriticalRows == 1)
+  }
+
+  test("summary equals the per-check helpers on one partition of many distinct keys") {
+    // Past the object hash aggregate's sort-based fallback: quartiles
+    // computed next to the countDistincts would merge partial digests
+    // in another order and move (157.1 against approxQuantile's 144.9).
+    val many = spark.range(0, 20000, 1, 1).select(
+      concat(lit("S"), (col("id") % 300).cast("string")).as("series_id"),
+      (lit(1995) + col("id") % 31).cast("int").as("year"),
+      concat(lit("Q0"), (col("id") % 5 + 1).cast("string")).as("period"),
+      ((col("id") * 7919 % 10007) / 10.0 - 100 + when(col("id") % 97 === 0, 5000.0)
+        .otherwise(0.0)).as("value"))
+    val got = assertSummaryMatchesChecks(many, population)
+    assert(got.bls_outlier_rows_iqr > 0)
+  }
+
+  test("summary of empty inputs counts zero (no quartiles, no fences)") {
+    val none = DataQuality.measure(bls.limit(0), population.limit(0))
+    assert(none.summary.copy(run_utc = "") == DqSummary(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, ""))
+    assert(none.blsNullCriticalRows == 0)
+  }
+
+  test("summary job budget on the fixture") {
+    val freshBls = BlsParser.parseFile(spark, fixturePath("pr.data.0.Current"))
+    val freshPop = PopulationParser.parseFile(spark, fixturePath("population.json"))
+    val jobs = jobsDuring(DataQuality.summary(spark, freshBls, freshPop))
+    assert(jobs <= 7, s"DataQuality.summary ran $jobs jobs")
   }
 }

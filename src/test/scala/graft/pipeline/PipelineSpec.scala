@@ -5,7 +5,10 @@ import java.nio.file.{Files, Paths}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.util.Success
 
+import org.apache.spark.sql.functions.col
+
 import graft.SparkSpec
+import graft.dq.{DqRun, DqSummary}
 import graft.ingest._
 
 /** Full A ∥ B → C run against canned HTTP: fixture BLS listing/file and
@@ -14,6 +17,7 @@ import graft.ingest._
   * values from the reference's executed outputs hold.
   */
 class PipelineSpec extends SparkSpec {
+  import spark.implicits._
 
   private val source = "https://example.test/pub/time.series/pr/"
   private val apiUrl = "https://api.test/data.jsonrecords"
@@ -71,5 +75,41 @@ class PipelineSpec extends SparkSpec {
 
     // overwrite publish is idempotent: re-run leaves the same row count
     assert(spark.table("graft_test_db.bls_best_year_by_series").count() == bestCount)
+
+    // the report carries the DQ row the run appended
+    assert(report.dq.bls_rows == 16 && report.dq.population_rows == 10)
+    val logged = spark.table("graft_test_db.dq_summary_runlog")
+      .where(col("run_utc") === report.dq.run_utc).as[DqSummary].collect()
+    assert(logged.toSeq == Seq(report.dq))
+  }
+
+  test("a header-only BLS file fails analytics with the empty-parse error") {
+    val dir = Files.createTempDirectory("graft-pipeline").toString
+    val cfg = PipelineConfig(
+      blsSource = source,
+      blsTargetDir = s"$dir/raw_bls",
+      populationUrl = apiUrl,
+      populationTargetPath = s"$dir/raw_datausa/population.json",
+      populationMetaPath = s"$dir/raw_datausa/_meta/population_ingest_run.json",
+      database = "graft_test_empty_db")
+    Files.createDirectories(Paths.get(cfg.blsTargetDir))
+    Files.write(Paths.get(cfg.blsTargetDir, cfg.blsFileName),
+      "series_id\tyear\tperiod\tvalue\tfootnote_codes\n".getBytes("UTF-8"))
+    Files.createDirectories(Paths.get(cfg.populationTargetPath).getParent)
+    Files.copy(Paths.get(fixturePath("population.json")), Paths.get(cfg.populationTargetPath))
+
+    val e = intercept[IllegalArgumentException](Pipeline.runAnalytics(spark, cfg))
+    assert(e.getMessage.contains("BLS parse produced 0 rows"))
+  }
+
+  test("validate fails on a missing output table") {
+    val run = DqRun(DqSummary(1, 1, 1, 0, 1, 1, 0, 0, 0, 0, "t"), blsNullCriticalRows = 0)
+    spark.sql("CREATE DATABASE IF NOT EXISTS graft_test_db")
+    val e = intercept[IllegalArgumentException](
+      Pipeline.validate(spark, run, Seq("graft_test_db.no_such_table")))
+    assert(e.getMessage.contains("missing output table graft_test_db.no_such_table"))
+    val nulls = intercept[RuntimeException](
+      Pipeline.validate(spark, run.copy(blsNullCriticalRows = 2), Nil))
+    assert(nulls.getMessage.contains("2 BLS rows with null critical fields"))
   }
 }
