@@ -48,7 +48,10 @@ object Analytics {
     * period Q01 LEFT JOIN population by year — BLS rows survive when
     * the population year is missing (real: population lacks 2020 and
     * everything outside 2013–2023). USING-join column order: `year`
-    * first, single copy. Population is tiny → broadcast.
+    * first, single copy. Population is tiny → broadcast. Ordered by
+    * year (the reference's O1) within one partition: the result is a
+    * single series, and a global `orderBy` would run a range-partition
+    * sampling job that reads the BLS input once more.
     */
   def reportSeriesQ01(
       bls: DataFrame,
@@ -62,6 +65,7 @@ object Analytics {
       .select(col("Year").as("year"), col("Population").as("population"))
     filtered
       .join(broadcast(pop), Seq("year"), "left")
-      .orderBy(col("year"))
+      .coalesce(1)
+      .sortWithinPartitions(col("year"))
   }
 }

@@ -1184,8 +1184,6 @@ object VectorExprImpl {
     s
   }
 
-  def normF(a: ArrayData): Double = math.sqrt(dotF(a, a))
-
   /** Max-abs symmetric int8 quantization of one `array<float>` vector
     * in a single local pass: scale = max|x|/127 (double), code_j =
     * floor(x_j/scale + 0.5) stored as float (|code| <= 127, exactly

@@ -39,12 +39,6 @@ object TextFunctions {
   def bpeIshTokens(text: Column): Column =
     regexp_extract_all(text, lit(bpeIshPattern), lit(0))
 
-  /** Sum of integer elements of an array column (left fold — matches
-    * DuckDB list_reduce fold order).
-    */
-  def arraySumInt(arr: Column): Column =
-    aggregate(arr, lit(0L), (acc, x) => acc + x.cast("long"))
-
   /** Count of tokens belonging to a fixed vocabulary (native codegen'd
     * kernel — see `graft.functions.TokensInSet`).
     */

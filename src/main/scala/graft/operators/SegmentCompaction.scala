@@ -25,7 +25,7 @@ import org.apache.spark.sql.SparkSession
   *     created last (the face's own crash protocol).
   *
   * Output files are sized to `targetBytesPerFile` from actual input
-  * bytes (the [[Compaction]] sizing rule) — at 100 TB the point is
+  * bytes (ceil(input bytes / target) partitions) — at 100 TB the point is
   * turning thousands of micro-batch files into scan-sized ones.
   *
   * Writing to a NEW directory side-steps every in-place hazard: the

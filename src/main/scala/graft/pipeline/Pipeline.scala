@@ -4,12 +4,11 @@ import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.analytics.Analytics
 import graft.dq.{DataQuality, DqRun, DqSummary}
 import graft.ingest._
-import graft.parse.PopulationParser
+import graft.parse.{BlsParser, PopulationParser}
 
 /** End-to-end orchestration of the reference's `rearc_quest_pipeline`
   * workflow (README.md:111-134): Task A (BLS mirror sync) ∥ Task B
@@ -71,50 +70,6 @@ object TableSink {
     healOrphanLocation(df, table)
     df.write.mode("append").format("parquet").saveAsTable(table)
   }
-
-  /** MERGE INTO (upsert) semantics on the parquet sink — the last piece
-    * of the reference's Delta publish surface re-expressed without the
-    * Delta log: target rows whose key matches an update are replaced,
-    * unmatched target rows survive, unmatched updates insert.
-    * `updates` must be unique per key (same contract as Delta MERGE,
-    * which errors on multiple matches) — enforced with a hard failure
-    * before any write, so a duplicate-keyed CDC batch cannot corrupt
-    * the table.
-    *
-    * Shape: one left-anti join (update keys vs target — Catalyst
-    * broadcasts the DISTINCT key projection when it is small, the
-    * common CDC case) + a union, then a copy-on-write of the table.
-    * The merged frame is checkpointed BEFORE the overwrite because
-    * Spark (correctly) refuses to overwrite a table still being
-    * scanned by the writing plan. At production scale the rewrite
-    * narrows to affected partitions (dynamic partition overwrite over
-    * the same anti-join); a transactional log (Delta/Iceberg) would
-    * replace the full-file copy — documented substitute, same
-    * semantics.
-    */
-  def merge(updates: DataFrame, table: String, keys: Seq[String]): Unit = {
-    require(keys.nonEmpty, "merge needs at least one key column")
-    val spark = updates.sparkSession
-    // enforce the documented Delta contract instead of silently writing
-    // duplicate-key rows; one aggregation over the (small, CDC-sized)
-    // update batch. Aliased count — a key column literally named
-    // "count" must not make the guard itself ambiguous.
-    val dupKeys = updates
-      .groupBy(keys.map(org.apache.spark.sql.functions.col): _*)
-      .agg(count(lit(1)).as("__graft_n"))
-      .filter(col("__graft_n") > 1).count()
-    require(dupKeys == 0,
-      s"merge: updates contain $dupKeys duplicate key group(s) on (${keys.mkString(", ")}) — " +
-        "MERGE requires unique update keys")
-    healOrphanLocation(updates, table)
-    if (!spark.catalog.tableExists(table)) { overwrite(updates, table); return }
-    val target = spark.table(table)
-    val survivors = target.join(
-      updates.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(),
-      keys, "left_anti")
-    val snapshot = survivors.unionByName(updates).localCheckpoint(true)
-    overwrite(snapshot, table)
-  }
 }
 
 object Pipeline {
@@ -166,10 +121,7 @@ object Pipeline {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS ${config.database}")
     val db = config.database
 
-    // the DSv2 source carries the same parse semantics as BlsParser
-    // (header/blank/malformed/footnote handling) with in-reader pruning
-    val bls = spark.read.format("bls")
-      .load(s"${config.blsTargetDir}/${config.blsFileName}")
+    val bls = BlsParser.parseFile(spark, s"${config.blsTargetDir}/${config.blsFileName}")
     val population = PopulationParser.parseFile(spark, config.populationTargetPath)
 
     val tables @ Seq(stats, best, report) = publishedTables(db)

@@ -396,23 +396,6 @@ object EventStreams {
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(flush)
   }
 
-  /** Convenience: run a streaming query over a parquet directory into
-    * an in-memory table and block until all available data is
-    * processed (local smoke harness for the streaming paths).
-    */
-  def runToMemory(
-      spark: SparkSession,
-      streaming: DataFrame,
-      queryName: String): Unit = {
-    val q = streaming.writeStream
-      .outputMode(OutputMode.Append)
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
-
   /** Event for the ordered-transition stream (q46/q48's input shape:
     * ts ties order by event_id).
     */

@@ -15,21 +15,6 @@ object SparkShims {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** The session's Hadoop configuration as a serializable map
-    * (sessionState is private[sql]) — custom sources must respect
-    * spark.hadoop.* settings on driver AND executors.
-    */
-  def sessionHadoopConfMap(spark: org.apache.spark.sql.SparkSession): Map[String, String] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val it = conf.iterator()
-    val b = Map.newBuilder[String, String]
-    while (it.hasNext) {
-      val e = it.next()
-      b += (e.getKey -> e.getValue)
-    }
-    b.result()
-  }
-
   /** Register a temp SQL function on a live session (functionRegistry
     * is private[sql]).
     */

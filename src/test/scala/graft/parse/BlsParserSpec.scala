@@ -42,4 +42,11 @@ class BlsParserSpec extends SparkSpec {
   test("negative values survive (no spurious filtering)") {
     assert(parsed.filter("value < 0").count() == 7)
   }
+
+  test("each line is split once: the gate tests the bound tokens") {
+    val p = BlsParser.parseFile(spark, fixturePath("pr.data.0.Current"))
+      .queryExecution.executedPlan.toString
+    assert(p.sliding("split(".length).count(_ == "split(") == 1,
+      s"expected exactly one split( in the plan:\n$p")
+  }
 }

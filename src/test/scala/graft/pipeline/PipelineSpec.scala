@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions.col
 import graft.SparkSpec
 import graft.dq.{DqRun, DqSummary}
 import graft.ingest._
+import graft.parse.BlsParser
 
 /** Full A ∥ B → C run against canned HTTP: fixture BLS listing/file and
   * population payload land in a temp raw zone, analytics publishes the
@@ -111,5 +112,36 @@ class PipelineSpec extends SparkSpec {
     val nulls = intercept[RuntimeException](
       Pipeline.validate(spark, run.copy(blsNullCriticalRows = 2), Nil))
     assert(nulls.getMessage.contains("2 BLS rows with null critical fields"))
+  }
+
+  test("analytics counts exactly the rows BlsParser parses: leading tab or \\v, full-width year and inf lines") {
+    val dir = Files.createTempDirectory("graft-pipeline").toString
+    val cfg = PipelineConfig(
+      blsSource = source,
+      blsTargetDir = s"$dir/raw_bls",
+      populationUrl = apiUrl,
+      populationTargetPath = s"$dir/raw_datausa/population.json",
+      populationMetaPath = s"$dir/raw_datausa/_meta/population_ingest_run.json",
+      database = "graft_test_planted_db")
+    val planted = Seq(
+      "\tPRSTAB00001\t2013\tQ01\t1.0", // leading tab: empty first token
+      "\u000bPRSVTB00001\t2013\tQ01\t1.0", // leading vertical tab: same
+      "PRSFWD00001\t\uff12\uff10\uff11\uff13\tQ01\t1.0", // full-width digit year
+      "PRSINF00001\t2013\tQ01\tinf") // Spark's double cast reads inf
+    val blsPath = Paths.get(cfg.blsTargetDir, cfg.blsFileName)
+    Files.createDirectories(blsPath.getParent)
+    val fixture = new String(
+      Files.readAllBytes(Paths.get(fixturePath("pr.data.0.Current"))), "UTF-8")
+    Files.write(blsPath, (fixture + planted.mkString("", "\n", "\n")).getBytes("UTF-8"))
+    Files.createDirectories(Paths.get(cfg.populationTargetPath).getParent)
+    Files.copy(Paths.get(fixturePath("population.json")), Paths.get(cfg.populationTargetPath))
+
+    val dq = Pipeline.runAnalytics(spark, cfg)
+    val parsed = BlsParser.parseFile(spark, blsPath.toString)
+    assert(dq.bls_rows == parsed.count())
+    assert(dq.bls_rows == 17, "the 16 fixture rows plus the inf row")
+    val ids = parsed.select("series_id").as[String].collect().toSet
+    assert(ids.contains("PRSINF00001"))
+    assert(Seq("PRSTAB00001", "PRSVTB00001", "PRSFWD00001").forall(!ids.contains(_)))
   }
 }

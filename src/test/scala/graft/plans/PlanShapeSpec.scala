@@ -565,4 +565,15 @@ class PlanShapeSpec extends SparkSpec {
       s"corp checkpoint is ${l.corp.rdd.getNumPartitions} partitions wide, " +
         s"expected defaultParallelism=${spark.sparkContext.defaultParallelism}")
   }
+
+  test("pipeline Req C orders its rows without a range-partition sampling job") {
+    val bls = graft.parse.BlsParser.parseFile(spark, fixturePath("pr.data.0.Current"))
+    val population =
+      graft.parse.PopulationParser.parseFile(spark, fixturePath("population.json"))
+    val p = graft.analytics.Analytics.reportSeriesQ01(bls, population)
+      .queryExecution.executedPlan.toString
+    assert(!p.contains("rangepartitioning"),
+      s"Req C plans a global sort (range-partition exchange):\n$p")
+    assert(p.contains("Sort ["), s"Req C lost its year order:\n$p")
+  }
 }
