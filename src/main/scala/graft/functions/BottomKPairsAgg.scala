@@ -16,9 +16,11 @@ import org.apache.spark.sql.types._
   * pair, so the common case (row not in the bottom k) is one O(1)
   * root comparison and an accepted row is O(log k). No boxing, no
   * per-row encoder work — the state the native aggregate below
-  * mutates in place.
+  * mutates in place, and the per-group accumulator of
+  * [[graft.operators.SampleQuantiles.bottomKSample]]'s fold (hence
+  * serializable).
   */
-final class BottomKHeap(val k: Int) {
+final class BottomKHeap(val k: Int) extends Serializable {
   val hs = new Array[Long](k)
   val vs = new Array[Double](k)
   var size = 0
@@ -62,13 +64,18 @@ final class BottomKHeap(val k: Int) {
     var i = 0
     while (i < o.size) { insert(o.hs(i), o.vs(i)); i += 1 }
   }
+
+  /** Slot indices of the kept pairs in (h asc, v asc) order. */
+  def sortedSlots: Array[Int] =
+    Array.range(0, size).sortWith((a, b) => lt(hs(a), vs(a), hs(b), vs(b)))
 }
 
-/** Native bottom-k-of-(hash, value) aggregate — the sample state of
-  * [[graft.operators.SampleQuantiles]] as a `TypedImperativeAggregate`
-  * over a primitive-array heap. The typed `Aggregator` route (q42's
-  * MinKAgg) pays per-row encoder dispatch; measured on the 600k-row
-  * q54 sample stage that was ~0.85 s of the query — this update path
+/** Native bottom-k-of-(hash, value) aggregate — the merge of
+  * [[graft.operators.IncrementalQuantiles]]' sample segments as a
+  * `TypedImperativeAggregate` over a primitive-array heap. The typed
+  * `Aggregator` route (q42's MinKAgg) pays per-row encoder dispatch;
+  * measured on the 600k-row q54 sample stage that was ~0.85 s of the
+  * query — this update path
   * is a direct child-eval + heap probe per row. MULTISET semantics:
   * duplicate pairs keep their multiplicity (the SQL `row_number ≤ k`
   * formulation the oracle replays keeps both copies too); the bottom-k
@@ -117,13 +124,9 @@ case class BottomKPairsAgg(
     buf.mergeFrom(other); buf
   }
 
-  override def eval(buf: BottomKHeap): Any = {
-    val idx = Array.range(0, buf.size).sortWith { (a, b) =>
-      buf.hs(a) < buf.hs(b) || (buf.hs(a) == buf.hs(b) && buf.vs(a) < buf.vs(b))
-    }
-    new GenericArrayData(
-      idx.map(i => InternalRow(buf.hs(i), buf.vs(i))).asInstanceOf[Array[Any]])
-  }
+  override def eval(buf: BottomKHeap): Any =
+    new GenericArrayData(buf.sortedSlots
+      .map(i => InternalRow(buf.hs(i), buf.vs(i))).asInstanceOf[Array[Any]])
 
   override def serialize(buf: BottomKHeap): Array[Byte] = {
     val bb = ByteBuffer.allocate(4 + 16 * buf.size)

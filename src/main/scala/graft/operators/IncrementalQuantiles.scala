@@ -35,11 +35,13 @@ import org.apache.spark.sql.functions._
   * atomic; exactly one appending driver owns the state directory (the
   * Structured Streaming model).
   *
-  * Scale shape: a segment is ≤ groups × k rows of (g, v, h); the
-  * merge is one distinct + one [[graft.functions.BottomKPairsAgg]]
-  * pass over segment-count × that — compact with
-  * [[SegmentCompaction.compactedCopy]] when segment count grows. Estimation runs
-  * driver-side on the groups × k merged sample
+  * Scale shape: a segment is ≤ groups × k rows of (g, v, h), sampled
+  * by [[SampleQuantiles.bottomKSample]]'s one-job fold (the batch
+  * never exchanges) and written from the driver; the merge is one
+  * distinct + one [[graft.functions.BottomKPairsAgg]] pass over
+  * segment-count × that — compact with
+  * [[SegmentCompaction.compactedCopy]] when segment count grows.
+  * Estimation runs driver-side on the groups × k merged sample
   * ([[SampleQuantiles.estimateFromSample]], the q13 pattern).
   */
 object IncrementalQuantiles {

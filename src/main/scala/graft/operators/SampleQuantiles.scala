@@ -1,10 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
+import graft.functions.BottomKHeap
 import graft.functions.VectorFunctions.roundHalfUp
 
 /** Mergeable per-group quantile estimation from a DETERMINISTIC
@@ -29,16 +33,18 @@ import graft.functions.VectorFunctions.roundHalfUp
   * thresholds (the KMV union-sketch argument), rather than joining
   * the two bottom-k sets directly.
   *
-  * Scale shape: the sample is a PARTIAL AGGREGATE, not a window — the
-  * [[graft.functions.BottomKPairsAgg]] native aggregate keeps an O(k) heap per
-  * group inside each scan task (one linear O(n log k) pass, no sort),
-  * so the ONLY shuffle carries O(map partitions × groups × k) pairs
-  * and the corpus never exchanges. (A `row_number ≤ k` window was
-  * measured 8× slower at sf1: even with the partial WindowGroupLimit
-  * it must first ROUND-ROBIN the whole column through an exchange to
-  * parallelize the per-partition sorts — the q42 distinct+window
-  * lesson, re-learned.) The interpolation grid then runs on
-  * groups × |ps| rows. The exact audit in [[withExactAudit]] is the
+  * Scale shape: the sample is a FOLD, not a window — each scan task
+  * keeps an O(k) [[graft.functions.BottomKHeap]] per group (one linear
+  * O(n log k) pass, no sort) and the driver merges the O(scan
+  * partitions × groups × k) partial heaps: ONE [[ModelFold]] job, no
+  * exchange, and the corpus never moves. (The same heap as a partial
+  * + final aggregate spent a second job on its one exchange of
+  * states; a `row_number ≤ k` window was measured 8× slower at sf1:
+  * even with the partial WindowGroupLimit it must first ROUND-ROBIN
+  * the whole column through an exchange to parallelize the
+  * per-partition sorts — the q42 distinct+window lesson, re-learned.)
+  * [[estimateFromSample]] then interpolates on the driver over
+  * groups × k rows. The exact audit in [[withExactAudit]] is the
   * expensive full-sort baseline (the d07/s09 audit pattern) — the
   * sample path is the product.
   */
@@ -50,22 +56,39 @@ object SampleQuantiles {
     * (g, v, h). The v tie-break makes the selected VALUE multiset
     * deterministic even when distinct rows share a key (they then
     * share h; hash collisions across keys are 2^-60), and the bottom-k
-    * MULTISET of a multiset is order-independent, so partial
-    * aggregation across arbitrary partitionings is deterministic.
+    * MULTISET of a multiset is order-independent, so folding across
+    * arbitrary partitionings is deterministic.
     * NULL keys are excluded (their hash is NULL; engines disagree on
-    * NULL sort position, so they cannot participate portably).
+    * NULL sort position, so they cannot participate portably). The
+    * result is a driver-side (local) frame of ≤ groups × k rows,
+    * each group's pairs in (h, v) order.
     */
   def bottomKSample(
       df: DataFrame, gCol: Column, vCol: Column, keyCol: Column,
-      k: Int = DefaultK): DataFrame =
-    df.select(gCol.as("g"), vCol.cast("double").as("v"),
+      k: Int = DefaultK): DataFrame = {
+    val pairs = df.select(gCol.as("g"), vCol.cast("double").as("v"),
         graft.functions.exprs.token_hash60(keyCol).as("h"))
       .filter(col("v").isNotNull && col("h").isNotNull)
-      .groupBy(col("g"))
-      .agg(graft.functions.BottomKPairsAgg
-        .bottomKPairs(col("h"), col("v"), k).as("__mins"))
-      .select(col("g"), explode(col("__mins")).as("hv"))
-      .select(col("g"), col("hv.v").as("v"), col("hv.h").as("h"))
+    val gField = pairs.schema("g")
+    val gType = gField.dataType
+    type Heaps = mutable.HashMap[Any, BottomKHeap]
+    def heapOf(acc: Heaps, g: Any) = acc.getOrElseUpdate(g, new BottomKHeap(k))
+    val heaps = ModelFold(pairs)(() => new Heaps)(
+      (acc, row) => {
+        heapOf(acc, CatalystTypeConverters.convertToScala(row.get(0, gType), gType))
+          .insert(row.getLong(2), row.getDouble(1))
+        acc
+      },
+      (a, b) => { b.foreach { case (g, heap) => heapOf(a, g).mergeFrom(heap) }; a })
+    val rows = heaps.toSeq.flatMap { case (g, heap) =>
+      heap.sortedSlots.map(i => Row(g, heap.vs(i), heap.hs(i)))
+    }
+    df.sparkSession.createDataFrame(
+      new java.util.ArrayList(scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
+      StructType(Seq(gField,
+        StructField("v", DoubleType, nullable = false),
+        StructField("h", LongType, nullable = false))))
+  }
 
   /** Exact linear-interpolation quantiles of `frame`'s (g, v) rows at
     * each p in `ps` — the quantile_cont definition, spelled out as
@@ -141,7 +164,7 @@ object SampleQuantiles {
   def withExactAudit(
       df: DataFrame, gCol: Column, vCol: Column, keyCol: Column,
       ps: Seq[Double], k: Int = DefaultK): DataFrame = {
-    val samp = bottomKSample(df, gCol, vCol, keyCol, k).localCheckpoint(true)
+    val samp = bottomKSample(df, gCol, vCol, keyCol, k)
     val full = df
       .select(gCol.as("g"), vCol.cast("double").as("v"))
       .filter(col("v").isNotNull)

@@ -33,8 +33,13 @@ import graft.functions.VectorFunctions.roundHalfUp
   * census (explode → groupBy word), one top-N collect of its
   * substring census for the seed, and per EM round one kernel call
   * per DISTINCT word ([[graft.functions.UnigramEm]], model as
-  * driver-side state) plus a vocab-sized integer aggregate whose
-  * collected count table the driver renormalizes. Micro-quantization
+  * driver-side state) whose expected counts fold per partition into a
+  * |pieces|-sized bigint vector that the driver merges and
+  * renormalizes — one [[ModelFold]] job per round, and one more for
+  * the Viterbi census: 7 jobs for two rounds (word census 2, seed 2,
+  * EM 1 + 1, Viterbi 1). The word and seed censuses stay distributed
+  * aggregates: the first grows with the corpus vocabulary, the second
+  * with the piece alphabet, neither with the model. Micro-quantization
   * headroom: expected-count sums reach ~1e6 micro-units per corpus
   * token, so bigint overflow needs ~9e12 tokens — at the 100 TB scale
   * drop the quantum to 1e4 or shard the M-step sum.
@@ -100,6 +105,18 @@ object UnigramTrainer {
     cnts.map(c => roundHalfUp(c.toDouble / tot, 6)).toArray
   }
 
+  /** Per-piece sums of (pid int, n bigint) rows: one [[ModelFold]]
+    * job into a |pieces|-sized count vector (exact: `Math.addExact`).
+    */
+  private def pieceSums(pidN: DataFrame, nPieces: Int): Array[Long] =
+    ModelFold(pidN)(() => new Array[Long](nPieces))(
+      (acc, row) => {
+        val pid = row.getInt(0)
+        acc(pid) = Math.addExact(acc(pid), row.getLong(1))
+        acc
+      },
+      ModelFold.addExact)
+
   /** Fit the unigram model with `rounds` EM iterations and Viterbi-
     * encode the corpus under the final model. Returns the model-sized
     * result frame (piece, em_prob, vit_count), pieces sorted into the
@@ -114,22 +131,17 @@ object UnigramTrainer {
     var probs = normalized(seed.map(_._2))
     var r = 0
     while (r < rounds) {
-      val cnts = words
-        .select(col("freq"),
-          explode(graft.functions.exprs.unigram_em(col("w"), pieces, probs)).as("e"))
-        .groupBy(col("e.pid").as("pid"))
-        .agg(sum(col("e.micro") * col("freq")).as("cnt"))
-        .collect().map(row => row.getInt(0) -> row.getLong(1)).toMap
-      probs = normalized(pieces.indices.map(cnts.getOrElse(_, 0L)))
+      val e = explode(graft.functions.exprs.unigram_em(col("w"), pieces, probs)).as("e")
+      val cnts = pieceSums(words.select(col("freq"), e)
+        .select(col("e.pid"), col("e.micro") * col("freq")), pieces.length)
+      probs = normalized(cnts.toSeq)
       r += 1
     }
-    val vit = words
-      .select(col("freq"),
-        explode(graft.functions.exprs.unigram_viterbi(col("w"), pieces, probs)).as("pid"))
-      .groupBy(col("pid")).agg(sum(col("freq")).as("vit_count"))
-      .collect().map(row => row.getInt(0) -> row.getLong(1)).toMap
+    val vit = pieceSums(words.select(
+      explode(graft.functions.exprs.unigram_viterbi(col("w"), pieces, probs)), col("freq")),
+      pieces.length)
     pieces.indices
-      .map(i => PieceStat(pieces(i), probs(i), vit.getOrElse(i, 0L)))
+      .map(i => PieceStat(pieces(i), probs(i), vit(i)))
       .toDF()
   }
 }

@@ -664,11 +664,12 @@ object AnalyticQueries {
     * sides run the SAME explicit rank-join interpolation, so the
     * oracle hash-matches the estimates from the raw data up.
     *
-    * Scale: the sample is a PARTIAL AGGREGATE (`BottomKPairs`, an
-    * O(k) heap per group per scan task) — the corpus never exchanges,
-    * the one shuffle carries O(map partitions × groups × k) states,
-    * and the interpolation grid is groups × |ps| — this IS the plan
-    * you'd run at 100 TB. The exact full-sort audit (`withExactAudit`)
+    * Scale: the sample is a FOLD (an O(k) `BottomKHeap` per group per
+    * scan task, merged on the driver — one `ModelFold` job, no
+    * exchange: the corpus never moves, only O(scan partitions ×
+    * groups × k) partial heaps do), and the interpolation runs on the
+    * driver over groups × k rows — this IS the plan you'd run at
+    * 100 TB. The exact full-sort audit (`withExactAudit`)
     * deliberately does NOT ride in the query: its per-group global
     * sort runs one task per group (measured 2.6 s vs sub-second
     * sample-only at sf0.1), the exact anti-scale shape the sample
@@ -685,8 +686,9 @@ object AnalyticQueries {
         li, $"l_returnflag", $"l_extendedprice",
         concat($"l_orderkey".cast("string"), lit("-"),
           $"l_linenumber".cast("string")))
-      // the sample is model-sized (groups × k rows): the interpolation
-      // runs driver-side (q13's pattern), one job end-to-end
+      // the sample is model-sized (groups × k rows, already on the
+      // driver): the interpolation runs driver-side (q13's pattern),
+      // so the build runs one job, the fold
       graft.operators.SampleQuantiles
         .estimateFromSample(samp, Seq(0.25, 0.5, 0.75, 0.9), "est_q")
         .withColumnRenamed("g", "l_returnflag")

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import graft.functions.VectorFunctions.roundHalfUp
 
 /** Event-table queries: time-windowed aggregation, semi-structured JSON
   * extraction, and batch sessionization. The same windowed-aggregation
@@ -255,9 +256,10 @@ object EventQueries {
     * retention fix the stages, this measures ALL pairwise flows).
     *
     * Scale shape: ONE corpus exchange — the lag window shuffles on
-    * user_id; the (prev, cur) census that follows aggregates a
-    * |event_types|² frame, and the per-prev totals come from a window
-    * over that model-sized census, not a second corpus pass.
+    * user_id; the (prev, cur) census that follows is |event_types|²
+    * counts, folded per partition and merged on the DRIVER
+    * ([[markovMatrix]], one job), where the per-prev totals and p are
+    * plain arithmetic: 3 jobs in all with the output action.
     *
     * Determinism: ts ties order by event_id on both sides; n is a
     * bigint count; p divides two exact integers as float64 (identical
@@ -278,16 +280,25 @@ object EventQueries {
       .filter($"prev_type".isNotNull)
   }
 
-  /** The Markov matrix from a transitions frame: (prev_type,
-    * event_type, n, p) with p = round-4 of the exact-integer float64
-    * quotient — identical arithmetic on both engines.
+  /** The Markov matrix of a transitions frame as driver-side rows
+    * (prev_type, event_type, n, p): one [[graft.operators.ModelFold]]
+    * job counts the |types|² census (`Math.addExact`, as ANSI `count`
+    * fails), and p replicates Spark's `round(n / sum(n) OVER
+    * (PARTITION BY prev_type), 4)` bit for bit — a long/long → double
+    * divide, then [[roundHalfUp]]. A NULL event_type is a cell of its
+    * own, as in `groupBy`.
     */
-  private def markovMatrix(trans: org.apache.spark.sql.DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    val wp = Window.partitionBy(col("prev_type"))
-    trans.groupBy(col("prev_type"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("p", round(col("n") / sum(col("n")).over(wp), 4))
+  private def markovMatrix(
+      trans: org.apache.spark.sql.DataFrame): Seq[(String, String, Long, Double)] = {
+    val census = graft.operators.ModelFold.sumByKey(
+        trans.select(col("prev_type"), col("event_type")))(
+      row => (row.getUTF8String(0).toString,
+        if (row.isNullAt(1)) null else row.getUTF8String(1).toString),
+      _ => 1L)
+    val tot = census.toSeq.groupMapReduce(_._1._1)(_._2)(Math.addExact(_, _))
+    census.toSeq.map { case ((prev, cur), n) =>
+      (prev, cur, n, roundHalfUp(n.toDouble / tot(prev).toDouble, 4))
+    }
   }
 
   /** The seq/trans/census/matrix CTE chain both oracle SQLs share —
@@ -311,7 +322,10 @@ object EventQueries {
 
   val q46MarkovTransitions = Q(
     "q46_markov_transitions",
-    (s, dir) => markovMatrix(userTransitions(s, dir)),
+    (s, dir) => {
+      import s.implicits._
+      markovMatrix(userTransitions(s, dir)).toDF("prev_type", "event_type", "n", "p")
+    },
     Some(s"""WITH $markovCtesSql
       SELECT prev_type, event_type, n, p FROM matrix"""),
     headline = true)
@@ -389,9 +403,12 @@ object EventQueries {
     * streams to event streams.
     *
     * Scale shape: the lag frame is checkpointed (matrix census AND
-    * scoring join both consume it — one corpus window pass, not two);
-    * the matrix is |types|²-sized and broadcast into the scoring
-    * join; per-user totals aggregate with map-side partials; top-20
+    * scoring both consume it — one corpus window pass, not two); the
+    * matrix is |types|²-sized and lives on the DRIVER (q46's
+    * [[markovMatrix]] fold), so scoring looks p up in a map literal —
+    * no broadcast, no join; a transition without a cell (a NULL
+    * event_type) drops out, as the oracle's inner JOIN drops it. Per-user
+    * totals aggregate with map-side partials; top-20
     * goes through orderBy+limit (TakeOrderedAndProject), then rank
     * over 20 rows.
     *
@@ -406,11 +423,11 @@ object EventQueries {
     "q48_transition_anomaly",
     (s, dir) => {
       import s.implicits._
-      import org.apache.spark.sql.expressions.Window
       val trans = userTransitions(s, dir).localCheckpoint(true)
-      val matrix = markovMatrix(trans)
-        .select($"prev_type", $"event_type", $"p")
-      val scored = trans.join(broadcast(matrix), Seq("prev_type", "event_type"))
+      val pByPrev = typedLit(markovMatrix(trans).filter(_._2 != null)
+        .groupMap(_._1)(r => r._2 -> r._4).view.mapValues(_.toMap).toMap)
+      val scored = trans.select($"user_id", pByPrev($"prev_type")($"event_type").as("p"))
+        .filter($"p".isNotNull)
         .select($"user_id",
           floor(-log(greatest($"p", lit(0.0001))) * lit(1000000.0) + lit(0.5))
             .cast("long").as("sm"))

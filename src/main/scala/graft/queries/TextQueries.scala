@@ -1285,8 +1285,10 @@ object TextQueries {
     * fit piece probabilities with [[graft.operators.UnigramTrainer]]'s
     * exact soft EM (lattice marginals, micro-quantized expected counts,
     * 6-dp renormalization on the driver), Viterbi-encode the corpus
-    * under the final model. Output: one row per seed piece with its
-    * post-EM probability and corpus Viterbi usage count.
+    * under the final model. Each EM round and the Viterbi census is
+    * one [[graft.operators.ModelFold]] job into per-piece bigint
+    * counts, so the build runs 7 jobs. Output: one row per seed piece
+    * with its post-EM probability and corpus Viterbi usage count.
     *
     * The DuckDB oracle replays the ENTIRE fit — substring seed census,
     * both lattice DPs as unrolled guarded CTE levels (t16's

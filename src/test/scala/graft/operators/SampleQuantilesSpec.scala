@@ -127,22 +127,25 @@ class SampleQuantilesSpec extends SparkSpec {
     }
   }
 
-  test("the sample is a partial aggregate: the corpus never exchanges") {
-    // on the REAL parquet table (a LocalTableScan toy plan can differ)
+  test("the sample is one job and no Exchange in its plan") {
+    // on the REAL parquet table (a LocalTableScan toy plan can differ):
+    // per-partition heaps merged on the driver, so the only job is the
+    // scan (under AQE an exchange would be a job of its own) and the
+    // corpus never exchanges
     val li = graft.core.Tables.lineitem(spark, sfDir)
-    val plan = SampleQuantiles
-      .bottomKSample(li, col("l_returnflag"), col("l_extendedprice"),
+    var samp: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsDuring {
+      samp = SampleQuantiles.bottomKSample(li, col("l_returnflag"), col("l_extendedprice"),
         concat(col("l_orderkey").cast("string"), lit("-"),
           col("l_linenumber").cast("string")), 64)
-      .queryExecution.executedPlan.toString
-    // partial ObjectHashAggregate below the one exchange, final above:
-    // the only shuffled rows are O(map partitions x groups x k) states
-    assert("ObjectHashAggregate".r.findAllIn(plan).size >= 2,
-      s"bottom-k must run as partial+final aggregate:\n$plan")
-    assert(!plan.contains("WindowGroupLimit") && !plan.contains("Window ["),
-      s"sample path must not sort/window the corpus:\n$plan")
-    val exchanges = "Exchange".r.findAllIn(plan).size
-    assert(exchanges == 1,
-      s"exactly one exchange (the aggregated states) expected:\n$plan")
+    }
+    assert(jobs == 1, s"bottomKSample ran $jobs jobs")
+    val plan = samp.queryExecution.executedPlan.toString
+    assert(plan.contains("LocalTableScan") && !plan.contains("Exchange"),
+      s"the sample must come back as a driver-side frame:\n$plan")
+    // and the estimate over it runs no further job
+    assert(jobsDuring {
+      SampleQuantiles.estimateFromSample(samp, Seq(0.5), "q").collect()
+    } == 0)
   }
 }

@@ -86,14 +86,14 @@ class UnigramTrainerSpec extends SparkSpec {
     assert(out.toSeq == expected.toSeq.sorted, "seed pieces in pid (piece) order")
   }
 
-  test("two EM rounds on the sf0.01 documents run at most 10 jobs") {
+  test("two EM rounds on the sf0.01 documents run at most 7 jobs") {
     val docs = graft.core.Tables.documents(
       spark, java.nio.file.Paths.get(sfDir).resolveSibling("sf0.01").toString)
-    // word census checkpoint, seed top-N collect, one collect per round
-    // and the Viterbi collect (2 jobs each under AQE); normalization
-    // runs on the driver
+    // words 2 (census checkpoint) + seed 2 (top-N collect) + EM 1 + 1
+    // + Viterbi 1 (one ModelFold job each); normalization runs on the
+    // driver
     val jobs = jobsDuring { UnigramTrainer.train(docs, "text", rounds = 2) }
-    assert(jobs <= 10, s"train(rounds = 2) ran $jobs jobs")
+    assert(jobs <= 7, s"train(rounds = 2) ran $jobs jobs")
   }
 
   test("a corpus without alphanumeric words trains to an empty model") {

@@ -232,6 +232,31 @@ class QueriesSpec extends SparkSpec {
     }
   }
 
+  private def sf001 = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.01").toString
+
+  /** Jobs of `body` once the tables' schemas are cached: the first
+    * read of a path infers its schema in a job of its own.
+    */
+  private def warmJobs(tables: String*)(body: => Unit): Int = {
+    tables.foreach(t => graft.core.Tables(spark, sf001, t))
+    jobsDuring(body)
+  }
+
+  test("q46 runs in at most 3 jobs on the sf0.01 events") {
+    // the lag window's map stage + the census fold + the output action
+    val jobs = warmJobs("events") {
+      Registry.byName("q46_markov_transitions").run(spark, sf001)
+        .write.format("noop").mode("overwrite").save()
+    }
+    assert(jobs <= 3, s"q46 ran $jobs jobs")
+  }
+
+  test("q48 builds in at most 5 jobs on the sf0.01 events") {
+    // lag checkpoint 2 + the census fold 1 + the top-20 collect 2
+    val jobs = warmJobs("events") { Registry.byName("q48_transition_anomaly").run(spark, sf001) }
+    assert(jobs <= 5, s"q48 build ran $jobs jobs")
+  }
+
   test("s17 binary rerank: shape, exact hamming vs driver-side sign pack, cosine agrees with s01") {
     val rows = Registry.byName("s17_binary_rerank").run(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
