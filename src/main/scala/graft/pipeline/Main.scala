@@ -45,6 +45,13 @@ final class LocalDirFetcher(sourceDir: String, apiFileName: String = "population
   * directory, then print the ingest reports, the DQ row's counts and
   * the published tables.
   *
+  * The raw zone lands under `workDir`; the published tables persist as
+  * parquet directories in the warehouse, `spark-warehouse/<database>.db/`
+  * under the current working directory (see [[TableSink]]). A run from
+  * the same working directory therefore replaces the three curated
+  * tables and appends one row to the `dq_summary_runlog` the earlier
+  * runs left.
+  *
   * Usage: runMain graft.pipeline.Main <sourceDir> <workDir> [database]
   */
 object Main {
@@ -61,7 +68,7 @@ object Main {
       populationMetaPath = s"$workDir/raw_datausa/_meta/population_ingest_run.json",
       database = db)
 
-    val spark = GraftSession.local(appName = "graft-pipeline", hive = true)
+    val spark = GraftSession.local(appName = "graft-pipeline")
     val report = Pipeline.run(
       spark, new LocalDirFetcher(sourceDir), LocalFileStore, config)
 

@@ -3,7 +3,9 @@ package graft.pipeline
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.analytics.Analytics
 import graft.dq.{DataQuality, DqRun, DqSummary}
@@ -40,34 +42,50 @@ final case class PipelineReport(
 /** Publish sinks (K1/K2): parquet saveAsTable with the reference's
   * overwrite / append semantics (Delta jars are absent in this
   * environment; the format is the only difference — SURVEY.md §7.4.8).
+  *
+  * Sessions use the in-memory catalog ([[graft.core.GraftSession]]),
+  * so a table persists only as its warehouse directory,
+  * `<spark.sql.warehouse.dir>/<db>.db/<table>`; the warehouse is
+  * `spark-warehouse/` under the working directory unless configured.
+  * A new JVM starts with a catalog that knows none of them; the first
+  * write to a table it does not know settles what happens to the
+  * directory a previous JVM left:
+  *  - `overwrite` deletes it, then writes the latest snapshot;
+  *  - `append` adopts it as the table (the schema is the written
+  *    frame's, so no inference job runs), then appends, so the
+  *    `dq_summary_runlog` history survives restarts.
   */
 object TableSink {
 
-  /** If the catalog lost track of `table` (e.g. a previous run used the
-    * in-memory catalog) but its warehouse directory survived, drop the
-    * orphaned location so the overwrite stays idempotent across JVMs.
+  /** The warehouse directory of `table`, when it exists and the
+    * catalog does not know the table: what a previous JVM left.
     */
-  private def healOrphanLocation(df: DataFrame, table: String): Unit = {
-    val spark = df.sparkSession
-    if (!spark.catalog.tableExists(table)) {
+  private def orphanLocation(spark: SparkSession, table: String): Option[Path] =
+    if (spark.catalog.tableExists(table)) None
+    else {
       val warehouse = spark.conf.get("spark.sql.warehouse.dir")
       val rel = table.split('.') match {
         case Array(db, t) => s"$db.db/$t"
         case Array(t) => t
       }
-      val path = new org.apache.hadoop.fs.Path(s"$warehouse/$rel")
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(path)) fs.delete(path, true)
+      val path = new Path(s"$warehouse/$rel")
+      Some(path).filter(p => p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
     }
-  }
 
   def overwrite(df: DataFrame, table: String): Unit = {
-    healOrphanLocation(df, table)
+    val spark = df.sparkSession
+    orphanLocation(spark, table).foreach { p =>
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
     df.write.mode("overwrite").format("parquet").saveAsTable(table)
   }
 
   def append(df: DataFrame, table: String): Unit = {
-    healOrphanLocation(df, table)
+    orphanLocation(df.sparkSession, table).foreach { p =>
+      // Spark writes every parquet column as nullable
+      val schema = StructType(df.schema.fields.map(_.copy(nullable = true)))
+      df.sparkSession.catalog.createTable(table, "parquet", schema, Map("path" -> p.toString))
+    }
     df.write.mode("append").format("parquet").saveAsTable(table)
   }
 }

@@ -442,7 +442,8 @@ object SimilarityQueries {
     (s, dir) => {
       import s.implicits._
       val e = Tables.embeddings(s, dir)
-      val model = graft.operators.KMeans.fit(e, "embedding", "vec_id", KmK, KmIters)
+      val model = graft.operators.KMeans.fit(e, "embedding", "vec_id", KmK, KmIters,
+        computeWcss = false)
       val cents = model.centroids.zipWithIndex.flatMap { case (c, i) =>
         c.zipWithIndex.map { case (m, j) => (i.toLong, j.toLong, m) }
       }.toSeq

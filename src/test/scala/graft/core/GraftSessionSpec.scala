@@ -23,6 +23,15 @@ class GraftSessionSpec extends SparkSpec {
         offenders.mkString("\n"))
   }
 
+  test("no session in src/main enables Hive: the catalog is the in-memory one") {
+    val offenders = mainCodeLines().collect {
+      case (file, line) if line.contains("enableHiveSupport") => s"$file: ${line.trim}"
+    }
+    if (offenders.nonEmpty)
+      fail("sessions use the in-memory catalog; TableSink keeps tables across JVMs:\n" +
+        offenders.mkString("\n"))
+  }
+
   test("GraftExtensions.install is idempotent: a second install adds nothing") {
     GraftExtensions.install(spark)
     GraftExtensions.install(spark)

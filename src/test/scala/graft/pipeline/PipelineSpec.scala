@@ -144,4 +144,25 @@ class PipelineSpec extends SparkSpec {
     assert(ids.contains("PRSINF00001"))
     assert(Seq("PRSTAB00001", "PRSVTB00001", "PRSFWD00001").forall(!ids.contains(_)))
   }
+
+  test("TableSink adopts a run log a previous JVM left, and replaces an orphaned table") {
+    val db = "graft_test_adopt_db"
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+    val dbDir = s"${spark.conf.get("spark.sql.warehouse.dir")}/$db.db"
+    def rows(run: String, n: Long) =
+      Seq(DqSummary(n, 1, 1, 0, 1, 1, 0, 0, 0, 0, run)).toDF()
+    // what an earlier JVM left: directories the fresh catalog does not know
+    rows("earlier", 5).write.parquet(s"$dbDir/dq_summary_runlog")
+    rows("earlier", 5).write.parquet(s"$dbDir/population_stats_2013_2018")
+    assert(!spark.catalog.tableExists(s"$db.dq_summary_runlog"))
+
+    TableSink.append(rows("now", 7), s"$db.dq_summary_runlog")
+    val log = spark.table(s"$db.dq_summary_runlog").as[DqSummary].collect()
+    assert(log.map(r => r.run_utc -> r.bls_rows).sorted.toSeq ==
+      Seq("earlier" -> 5L, "now" -> 7L), "append must keep the earlier runs' rows")
+
+    TableSink.overwrite(rows("now", 7), s"$db.population_stats_2013_2018")
+    assert(spark.table(s"$db.population_stats_2013_2018").as[DqSummary]
+      .collect().map(_.run_utc).toSeq == Seq("now"), "overwrite keeps the latest snapshot")
+  }
 }

@@ -257,6 +257,13 @@ class QueriesSpec extends SparkSpec {
     assert(jobs <= 5, s"q48 build ran $jobs jobs")
   }
 
+  test("s06 builds in at most 7 jobs on the sf0.01 embeddings") {
+    // the seed collect and two Lloyd rounds' centroid collects; s06
+    // reads no WCSS, so no round runs the WCSS `head()` (11 jobs with it)
+    val jobs = warmJobs("embeddings") { Registry.byName("s06_kmeans").run(spark, sf001) }
+    assert(jobs <= 7, s"s06 build ran $jobs jobs")
+  }
+
   test("s17 binary rerank: shape, exact hamming vs driver-side sign pack, cosine agrees with s01") {
     val rows = Registry.byName("s17_binary_rerank").run(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3), r.getDouble(4)))

@@ -7,7 +7,7 @@ Usage: python3 tools/check.py [sfDir] [outDir] [--skip-verify] [query...]
 
 --bench-oracle: instead of comparing, TIME each headline query's oracle
 SQL in DuckDB (median of 3 reps, same parquet, same host) and merge the
-timings into /root/repo/ORACLE_BENCH.json keyed by the sf basename.
+timings into this checkout's ORACLE_BENCH.json keyed by the sf basename.
 graft.Bench picks that file up and emits a per-query Spark/DuckDB ratio
 — the measurable stand-in for the "within 2x of baseline" gate, since
 the reference publishes no wall-times (BASELINE.md).
@@ -16,6 +16,10 @@ import json, math, os, subprocess, sys, time
 from pathlib import Path
 
 import duckdb
+
+# The checkout this script belongs to: Verify runs, and ORACLE_BENCH.json
+# lands, there, so a second checkout (say, a parent clone) checks itself.
+repo = Path(__file__).resolve().parents[1]
 
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out = Path(sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out")
@@ -28,7 +32,7 @@ tee_stdout("check", sf, out)
 if "--skip-verify" not in flags:
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {sf} {out}'],
-        cwd="/root/repo", capture_output=True, text=True)
+        cwd=repo, capture_output=True, text=True)
     tail = "\n".join((r.stdout + r.stderr).splitlines()[-15:])
     if r.returncode != 0:
         print("VERIFY FAILED:\n", tail)
@@ -104,7 +108,7 @@ if "--bench-oracle" in flags:
             reps.append(time.perf_counter() - t0)
         timings[name] = round(sorted(reps)[1], 3)
         print(f"oracle {name}: {timings[name]}s")
-    bench_path = Path("/root/repo/ORACLE_BENCH.json")
+    bench_path = repo / "ORACLE_BENCH.json"
     merged = json.loads(bench_path.read_text()) if bench_path.exists() else {}
     # merge per QUERY within the SF: a subset run (explicit names) must
     # not wipe the other headline timings for that SF

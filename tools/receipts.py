@@ -8,7 +8,7 @@ argv — so a receipt can never silently describe a different data
 generation the way the unstamped /tmp/pipe02_staged.txt did in r17/r18.
 
 The receipt is written next to the dump it verifies (outDir) AND, when
-/root/repo/receipts exists, copied under receipts/<round>/ on exit so
+this checkout's receipts/ exists, copied under receipts/<round>/ on exit so
 the evidence is committed, cat-able, and survives /tmp churn.
 
 Round comes from $GRAFT_ROUND (e.g. "r19"); default is a date stamp so
@@ -60,7 +60,7 @@ class _Tee:
 def tee_stdout(tool, sf_dir, out_dir):
     """Duplicate stdout (and a metadata header) into
     `<out_dir>/receipt_<tool>_<sfbase>_<round>.txt`, mirrored into
-    /root/repo/receipts/<round>/ at interpreter exit. Returns the
+    this checkout's receipts/<round>/ at interpreter exit. Returns the
     receipt path. Failures to set up the receipt never block the
     check itself."""
     try:
@@ -85,7 +85,7 @@ def tee_stdout(tool, sf_dir, out_dir):
         def _mirror():
             try:
                 f.flush()
-                repo = Path("/root/repo/receipts")
+                repo = Path(__file__).resolve().parents[1] / "receipts"
                 if repo.is_dir():
                     dst = repo / os.environ.get("GRAFT_ROUND", rnd)
                     dst.mkdir(parents=True, exist_ok=True)
