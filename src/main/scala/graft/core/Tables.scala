@@ -27,10 +27,7 @@ object Tables {
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = apply(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = apply(spark, sfDir, "orders")
   def customer(spark: SparkSession, sfDir: String): DataFrame = apply(spark, sfDir, "customer")
-  def supplier(spark: SparkSession, sfDir: String): DataFrame = apply(spark, sfDir, "supplier")
   def nation(spark: SparkSession, sfDir: String): DataFrame = apply(spark, sfDir, "nation")
-  def region(spark: SparkSession, sfDir: String): DataFrame = apply(spark, sfDir, "region")
-  def part(spark: SparkSession, sfDir: String): DataFrame = apply(spark, sfDir, "part")
   /** `events.ts` has shipped in two physical types across testdata
     * generations, so this loader normalizes BOTH to the engine-wide
     * TimestampType (micros, session-tz):

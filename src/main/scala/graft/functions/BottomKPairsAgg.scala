@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftshim.SparkShims
 import org.apache.spark.sql.types._
 
@@ -15,9 +15,8 @@ import org.apache.spark.sql.types._
   * arrays forming a MAX-heap on (h, v) — the root is the worst kept
   * pair, so the common case (row not in the bottom k) is one O(1)
   * root comparison and an accepted row is O(log k). No boxing, no
-  * per-row encoder work — the state the native aggregate below
-  * mutates in place, and the per-group accumulator of
-  * [[graft.operators.SampleQuantiles.bottomKSample]]'s fold (hence
+  * per-row encoder work — the per-group accumulator of
+  * [[graft.operators.SampleQuantiles]]' bottom-k fold (hence
   * serializable).
   */
 final class BottomKHeap(val k: Int) extends Serializable {
@@ -70,101 +69,11 @@ final class BottomKHeap(val k: Int) extends Serializable {
     Array.range(0, size).sortWith((a, b) => lt(hs(a), vs(a), hs(b), vs(b)))
 }
 
-/** Native bottom-k-of-(hash, value) aggregate — the merge of
-  * [[graft.operators.IncrementalQuantiles]]' sample segments as a
-  * `TypedImperativeAggregate` over a primitive-array heap. The typed
-  * `Aggregator` route (q42's MinKAgg) pays per-row encoder dispatch;
-  * measured on the 600k-row q54 sample stage that was ~0.85 s of the
-  * query — this update path
-  * is a direct child-eval + heap probe per row. MULTISET semantics:
-  * duplicate pairs keep their multiplicity (the SQL `row_number ≤ k`
-  * formulation the oracle replays keeps both copies too); the bottom-k
-  * multiset of a multiset is order-independent, so partial aggregation
-  * across arbitrary partitionings is deterministic. NULL h or v rows
-  * are skipped (countDistinct-style semantics; engines disagree on
-  * NULL sort position, so nulls cannot participate portably).
-  *
-  * eval() returns the pairs sorted by (h asc, v asc) as
-  * array<struct<h, v>>.
-  */
-case class BottomKPairsAgg(
-    hChild: Expression,
-    vChild: Expression,
-    k: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[BottomKHeap] {
-  require(k >= 1, s"k must be >= 1, got $k")
-
-  override def children: Seq[Expression] = Seq(hChild, vChild)
-  // update() casts blindly — reject non-(long, double) children at analysis
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (hChild.dataType == LongType && vChild.dataType == DoubleType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bottom_k_pairs requires (BIGINT, DOUBLE) children, got " +
-        s"(${hChild.dataType.sql}, ${vChild.dataType.sql})")
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("h", LongType, nullable = false),
-    StructField("v", DoubleType, nullable = false))), containsNull = false)
-  override def prettyName: String = "bottom_k_pairs"
-
-  override def createAggregationBuffer(): BottomKHeap = new BottomKHeap(k)
-
-  override def update(buf: BottomKHeap, input: InternalRow): BottomKHeap = {
-    val h = hChild.eval(input)
-    val v = vChild.eval(input)
-    if (h != null && v != null)
-      buf.insert(h.asInstanceOf[Long], v.asInstanceOf[Double])
-    buf
-  }
-
-  override def merge(buf: BottomKHeap, other: BottomKHeap): BottomKHeap = {
-    buf.mergeFrom(other); buf
-  }
-
-  override def eval(buf: BottomKHeap): Any =
-    new GenericArrayData(buf.sortedSlots
-      .map(i => InternalRow(buf.hs(i), buf.vs(i))).asInstanceOf[Array[Any]])
-
-  override def serialize(buf: BottomKHeap): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + 16 * buf.size)
-    bb.putInt(buf.size)
-    var i = 0
-    while (i < buf.size) { bb.putLong(buf.hs(i)); bb.putDouble(buf.vs(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): BottomKHeap = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val heap = new BottomKHeap(k)
-    var i = 0
-    while (i < n) { heap.insert(bb.getLong, bb.getDouble); i += 1 }
-    heap
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BottomKPairsAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BottomKPairsAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): BottomKPairsAgg =
-    copy(hChild = newChildren(0), vChild = newChildren(1))
-}
-
 object BottomKPairsAgg {
-  /** Column wrapper: `bottom_k_pairs(h, v, k)` as an aggregate call. */
-  def bottomKPairs(h: Column, v: Column, k: Int): Column =
-    SparkShims.column(
-      BottomKPairsAgg(SparkShims.expression(h), SparkShims.expression(v), k)
-        .toAggregateExpression())
-
-  /** Long-payload variant for id payloads: `bottom_k_id_pairs(h, id, k)`.
-    * Use this (never `id.cast("double")` into [[bottomKPairs]]) whenever
-    * the value slot carries an identifier — the double slot is exact only
-    * to 2^53, so md5-derived 60-bit ids would corrupt silently.
+  /** `bottom_k_id_pairs(h, id, k)` as an aggregate call: the k
+    * smallest (h, id) pairs per group. The payload is a LONG, never an
+    * id cast to double — a double is exact only to 2^53, so md5-derived
+    * 60-bit ids would corrupt silently.
     */
   def bottomKIdPairs(h: Column, id: Column, k: Int): Column =
     SparkShims.column(
@@ -221,11 +130,21 @@ final class BottomKLongHeap(val k: Int) {
   }
 }
 
-/** [[BottomKPairsAgg]] with a BIGINT value slot — the id-payload form.
-  * Every semantic note on the double variant applies (multiset, null
-  * skip, deterministic partial aggregation); the only difference is the
-  * payload type, which round-trips arbitrary longs bit-exactly instead
-  * of silently flattening ids above 2^53 through an IEEE double.
+/** Native bottom-k-of-(hash, id) aggregate — a `TypedImperativeAggregate`
+  * over a primitive-array heap. The typed `Aggregator` route (q42's
+  * MinKAgg) pays per-row encoder dispatch; this update path is a direct
+  * child-eval + heap probe per row. The BIGINT payload round-trips
+  * arbitrary longs bit-exactly instead of silently flattening ids above
+  * 2^53 through an IEEE double.
+  *
+  * MULTISET semantics: duplicate pairs keep their multiplicity (the SQL
+  * `row_number ≤ k` formulation an oracle replays keeps both copies
+  * too); the bottom-k multiset of a multiset is order-independent, so
+  * partial aggregation across arbitrary partitionings is deterministic.
+  * NULL h or v rows are skipped (countDistinct-style semantics; engines
+  * disagree on NULL sort position, so nulls cannot participate
+  * portably).
+  *
   * eval() returns array<struct<h bigint, v bigint>> sorted (h asc, v asc).
   */
 case class BottomKIdPairsAgg(

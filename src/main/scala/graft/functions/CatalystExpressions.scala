@@ -47,22 +47,6 @@ object TextExprImpl {
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  /** Jump consistent hash (Lamport & Veach 2014): the published
-    * algorithm verbatim — unsigned 64-bit LCG step (Java long * and +
-    * wrap identically to uint64), `>>> 33` for the unsigned shift.
-    */
-  def jumpBucket(key0: Long, n: Int): Int = {
-    var key = key0
-    var b = -1L
-    var j = 0L
-    while (j < n) {
-      b = j
-      key = key * 2862933555777941757L + 1L
-      j = ((b + 1) * ((1L << 31).toDouble / ((key >>> 33) + 1).toDouble)).toLong
-    }
-    b.toInt
-  }
-
   /** First 15 hex chars of md5(token) as a 60-bit non-negative long —
     * an engine-portable hash (DuckDB:
     * CAST('0x'||substr(md5(t),1,15) AS BIGINT)).
@@ -154,33 +138,6 @@ case class TokenHash60(child: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"graft.functions.TextExprImpl.tokenHash60($c)")
 
   override protected def withNewChildInternal(newChild: Expression): TokenHash60 =
-    copy(child = newChild)
-}
-
-/** Jump consistent hash (Lamport & Veach 2014, "A Fast, Minimal
-  * Memory, Consistent Hash Algorithm"): key → bucket in [0, n) such
-  * that growing n → n+1 moves EXACTLY a 1/(n+1) expected fraction of
-  * keys — the reshard-stability property `pmod(hash, n)` lacks (mod
-  * reshuffles nearly every key). long → int, codegen'd; the loop is
-  * O(ln n) multiply-shift steps, no table, no state.
-  */
-case class JumpBucket(child: Expression, n: Int) extends UnaryExpression {
-  require(n > 0, s"jump_bucket needs a positive bucket count, got $n")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"jump_bucket requires BIGINT input, got ${child.dataType.sql}")
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "jump_bucket"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextExprImpl.jumpBucket(input.asInstanceOf[Long], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextExprImpl.jumpBucket($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): JumpBucket =
     copy(child = newChild)
 }
 
@@ -1836,9 +1793,6 @@ object exprs {
 
   def token_hash60(c: Column): Column =
     SparkShims.column(TokenHash60(SparkShims.expression(c)))
-
-  def jump_bucket(c: Column, n: Int): Column =
-    SparkShims.column(JumpBucket(SparkShims.expression(c), n))
 
   def ngram_rep_stats(c: Column, n: Int): Column =
     SparkShims.column(NgramRepStats(SparkShims.expression(c), n))

@@ -45,17 +45,6 @@ object IncrementalAnn {
       centroids: Array[Array[Float]],
       cb: ProductQuantizer.Codebook)
 
-  private def committedBatches(
-      fs: org.apache.hadoop.fs.FileSystem,
-      indexPath: Path): Seq[(Long, Path)] =
-    if (!fs.exists(indexPath)) Seq.empty
-    else fs.listStatus(indexPath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .flatMap(st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("batch=").toLong)
-          .toOption.map(id => (id, st.getPath)))
-      .filter { case (_, p) => fs.exists(new Path(p, "codes/_SUCCESS")) }
-
   /** Fit the frozen model (coarse centroids = first `nCentroids`
     * vectors by id, PQ codebook = [[ProductQuantizer.seedCodebook]] of
     * the first `k`) from a reference frame and persist it under
@@ -126,7 +115,8 @@ object IncrementalAnn {
     val spark = newVecs.sparkSession
     val indexPath = new Path(indexDir)
     val fs = indexPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (committedBatches(fs, indexPath).exists(_._1 == batchId)) return
+    if (StorePolicy.committed(fs, indexPath, marker = layout().commitMarker)
+      .exists(_._1 == batchId)) return
     // a tombstoned id would be silently subtracted at search — reject
     Tombstones.requireNotTombstoned(newVecs.select(col(idCol)), idCol, indexDir)
     val model = loadModel(spark, indexDir)
@@ -162,7 +152,8 @@ object IncrementalAnn {
     // belowBatch = the SNAPSHOT read (state as of a past batch
     // boundary, reproducible forever since segments are immutable);
     // tombstones pierce snapshots — erasure beats time travel
-    val committed = committedBatches(fs, indexPath).filter(_._1 < belowBatch)
+    val committed = StorePolicy.committed(fs, indexPath, marker = layout().commitMarker)
+      .filter(_._1 < belowBatch)
     require(committed.nonEmpty, s"no committed segments under $indexDir")
     val model = loadModel(spark, indexDir)
     // per-segment reads (a multi-path read trips partition discovery

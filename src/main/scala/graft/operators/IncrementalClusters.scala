@@ -47,20 +47,6 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalClusters {
 
-  /** Committed (batchId, path) pairs — a batch counts only once its
-    * edges `_SUCCESS` marker exists (sigs are written first).
-    */
-  private def committedBatches(
-      fs: org.apache.hadoop.fs.FileSystem,
-      statePath: Path): Seq[(Long, Path)] =
-    if (!fs.exists(statePath)) Seq.empty
-    else fs.listStatus(statePath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .flatMap(st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("batch=").toLong)
-          .toOption.map(id => (id, st.getPath)))
-      .filter { case (_, p) => fs.exists(new Path(p, "edges/_SUCCESS")) }
-
   /** Absorb one batch: commit its signatures and the candidate edges
     * it completes (against prior state AND within itself) at the
     * d06 gate (`estSim >= threshold`). Idempotent per `batchId`.
@@ -75,7 +61,7 @@ object IncrementalClusters {
     val spark = newDocs.sparkSession
     val statePath = new Path(stateDir)
     val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = committedBatches(fs, statePath)
+    val committed = StorePolicy.committed(fs, statePath, marker = layout.commitMarker)
     val id = batchId.getOrElse(
       if (committed.isEmpty) 0L else committed.map(_._1).max + 1)
     if (committed.exists(_._1 == id)) return
@@ -124,7 +110,7 @@ object IncrementalClusters {
     import spark.implicits._
     val statePath = new Path(stateDir)
     val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val paths = committedBatches(fs, statePath)
+    val paths = StorePolicy.committed(fs, statePath, marker = layout.commitMarker)
       .map(p => new Path(p._2, "edges").toString)
     if (paths.isEmpty)
       Seq.empty[(Long, Long)].toDF("doc_id", "comp")

@@ -42,21 +42,6 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalDedup {
 
-  /** Committed (batchId, path) pairs under `stateDir` — a batch dir
-    * without `_SUCCESS` is an in-flight or crashed write and is never
-    * read as state.
-    */
-  private def committedBatches(
-      fs: org.apache.hadoop.fs.FileSystem,
-      statePath: Path): Seq[(Long, Path)] =
-    if (!fs.exists(statePath)) Seq.empty
-    else fs.listStatus(statePath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .flatMap(st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("batch=").toLong)
-          .toOption.map(id => (id, st.getPath)))
-      .filter { case (_, p) => fs.exists(new Path(p, "_SUCCESS")) }
-
   /** Screen one arriving batch against the signature state at
     * `stateDir`; returns the surviving rows of `newDocs` and commits
     * the batch's signatures (survivors AND drops — the greedy policy
@@ -86,7 +71,7 @@ object IncrementalDedup {
       .localCheckpoint(true)
     val statePath = new Path(stateDir)
     val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = committedBatches(fs, statePath)
+    val committed = StorePolicy.committed(fs, statePath)
     val id = batchId.getOrElse(
       if (committed.isEmpty) 0L else committed.map(_._1).max + 1)
     // on retry the batch's own signatures are already committed:

@@ -44,17 +44,6 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalDsir {
 
-  private def committedBatches(
-      fs: org.apache.hadoop.fs.FileSystem,
-      statePath: Path): Seq[(Long, Path)] =
-    if (!fs.exists(statePath)) Seq.empty
-    else fs.listStatus(statePath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .flatMap(st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("batch=").toLong)
-          .toOption.map(id => (id, st.getPath)))
-      .filter { case (_, p) => fs.exists(new Path(p, "_SUCCESS")) }
-
   private def fsOf(spark: SparkSession, stateDir: String) = {
     val p = new Path(stateDir)
     (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
@@ -75,7 +64,8 @@ object IncrementalDsir {
       buckets: Int = Dsir.DefaultBuckets): Unit = {
     val spark = newDocs.sparkSession
     val (statePath, fs) = fsOf(spark, stateDir)
-    if (committedBatches(fs, statePath).exists(_._1 == batchId)) return
+    if (StorePolicy.committed(fs, statePath, marker = layout.commitMarker)
+      .exists(_._1 == batchId)) return
     val seg = new Path(statePath, s"batch=$batchId")
     fs.delete(seg, true)
     val feats = Dsir.featureRows(newDocs, idCol, textCol, isTargetCol, buckets)
@@ -100,7 +90,7 @@ object IncrementalDsir {
       stateDir: String,
       buckets: Int = Dsir.DefaultBuckets): DataFrame = {
     val (statePath, fs) = fsOf(spark, stateDir)
-    val segs = committedBatches(fs, statePath)
+    val segs = StorePolicy.committed(fs, statePath, marker = layout.commitMarker)
     require(segs.nonEmpty, s"no committed batches under $stateDir")
     val census = spark.read
       .parquet(segs.map(s => s"${s._2}/census"): _*)

@@ -72,17 +72,6 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalGraphAnn {
 
-  private def committedBatches(
-      fs: org.apache.hadoop.fs.FileSystem,
-      statePath: Path): Seq[(Long, Path)] =
-    if (!fs.exists(statePath)) Seq.empty
-    else fs.listStatus(statePath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .flatMap(st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("batch=").toLong)
-          .toOption.map(id => (id, st.getPath)))
-      .filter { case (_, p) => fs.exists(new Path(p, "_SUCCESS")) }
-
   private def segPath(statePath: Path, batchId: Long, kind: String): Path =
     new Path(new Path(statePath, s"batch=$batchId"), kind)
 
@@ -102,7 +91,7 @@ object IncrementalGraphAnn {
       rounds: Int): Unit = {
     val spark = emb.sparkSession
     val (statePath, fs) = fsOf(spark, stateDir)
-    require(committedBatches(fs, statePath).isEmpty,
+    require(StorePolicy.committed(fs, statePath, marker = layout.commitMarker).isEmpty,
       s"$stateDir already holds committed segments")
     val e = emb.select(col("vec_id"), col("embedding"))
     writeSegment(spark, statePath, 0L,
@@ -143,7 +132,7 @@ object IncrementalGraphAnn {
       belowBatch: Long = Long.MaxValue,
       applyDeletes: Boolean = true): DataFrame = {
     val (statePath, fs) = fsOf(spark, stateDir)
-    val dirs = committedBatches(fs, statePath)
+    val dirs = StorePolicy.committed(fs, statePath, marker = layout.commitMarker)
       .filter(_._1 < belowBatch)
       .map { case (id, _) => segPath(statePath, id, "vectors").toString }
     require(dirs.nonEmpty, s"no committed batches under $stateDir")
@@ -187,7 +176,7 @@ object IncrementalGraphAnn {
       belowBatch: Long,
       deleted: Option[DataFrame]): DataFrame = {
     val (statePath, fs) = fsOf(spark, stateDir)
-    val dirs = committedBatches(fs, statePath)
+    val dirs = StorePolicy.committed(fs, statePath, marker = layout.commitMarker)
       .filter(_._1 < belowBatch)
       .map { case (id, _) => segPath(statePath, id, "edges").toString }
     require(dirs.nonEmpty, s"no committed batches under $stateDir")
@@ -229,7 +218,8 @@ object IncrementalGraphAnn {
     import spark.implicits._
     val (statePath, fs) = fsOf(spark, stateDir)
     require(batchId > 0, "batch 0 is the createIndex bootstrap segment")
-    if (committedBatches(fs, statePath).exists(_._1 == batchId)) return
+    if (StorePolicy.committed(fs, statePath, marker = layout.commitMarker)
+      .exists(_._1 == batchId)) return
 
     val newVecs = batch.select(col("vec_id"), col("embedding"))
       .collect()

@@ -37,17 +37,6 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalHll {
 
-  private def committedBatches(
-      fs: org.apache.hadoop.fs.FileSystem,
-      statePath: Path): Seq[(Long, Path)] =
-    if (!fs.exists(statePath)) Seq.empty
-    else fs.listStatus(statePath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .flatMap(st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("batch=").toLong)
-          .toOption.map(id => (id, st.getPath)))
-      .filter { case (_, p) => fs.exists(new Path(p, "_SUCCESS")) }
-
   /** Append one batch's register frame as an immutable segment.
     * Idempotent per `batchId` (see class doc). Columns are normalized
     * to (g, j, m) in state so readers need no schema knowledge of the
@@ -62,7 +51,8 @@ object IncrementalHll {
     val spark = batch.sparkSession
     val statePath = new Path(stateDir)
     val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (committedBatches(fs, statePath).exists(_._1 == batchId)) return
+    if (StorePolicy.committed(fs, statePath, marker = layout.commitMarker)
+      .exists(_._1 == batchId)) return
     HllSketch.registers(batch, groupCol, valueCol)
       .withColumnRenamed(groupCol, "g")
       .write.mode("overwrite")
@@ -75,7 +65,7 @@ object IncrementalHll {
   def mergedRegisters(spark: SparkSession, stateDir: String): DataFrame = {
     val statePath = new Path(stateDir)
     val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = committedBatches(fs, statePath).map(_._2.toString)
+    val dirs = StorePolicy.committed(fs, statePath, marker = layout.commitMarker).map(_._2.toString)
     require(dirs.nonEmpty, s"no committed batches under $stateDir")
     spark.read.parquet(dirs: _*)
       .groupBy(col("g"), col("j"))

@@ -54,27 +54,17 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalHygieneLadder {
 
-  private def committed(
-      fs: org.apache.hadoop.fs.FileSystem, dir: Path): Seq[(Long, Path)] =
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .flatMap(st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("batch=").toLong)
-          .toOption.map(id => (id, st.getPath)))
-      .filter { case (_, p) => fs.exists(new Path(p, "_SUCCESS")) }
-
   private def writeSegment(
       df: DataFrame, dir: Path, batchId: Long,
       fs: org.apache.hadoop.fs.FileSystem): Unit =
-    if (!committed(fs, dir).exists(_._1 == batchId))
+    if (!StorePolicy.committed(fs, dir).exists(_._1 == batchId))
       df.write.mode("overwrite").parquet(new Path(dir, s"batch=$batchId").toString)
 
   private def readSegments(
       spark: SparkSession, dir: Path,
       fs: org.apache.hadoop.fs.FileSystem,
       excludeId: Option[Long] = None): Option[DataFrame] = {
-    val paths = committed(fs, dir)
+    val paths = StorePolicy.committed(fs, dir)
       .filter(c => !excludeId.contains(c._1)).map(_._2.toString)
     if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
   }

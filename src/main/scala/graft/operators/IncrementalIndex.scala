@@ -23,10 +23,11 @@ import org.apache.spark.sql.functions._
   *
   * Delivery semantics (the [[IncrementalDedup]] contract): segments
   * live under `indexDir/batch=<id>/{docs,postings}/`, a batch counts
-  * as committed only once BOTH parts' `_SUCCESS` markers exist, and a
-  * retried batch id overwrites the (possibly partial) segment with
-  * deterministic identical contents — at-least-once redelivery
-  * neither duplicates postings nor changes any score.
+  * as committed only once its last-written part's marker
+  * (`postings/_SUCCESS`, [[layout]]) exists, and a retried batch id
+  * overwrites the (possibly partial) segment with deterministic
+  * identical contents — at-least-once redelivery neither duplicates
+  * postings nor changes any score.
   *
   * Scale shape: at 100 TB each segment write is the batch's own scan;
   * search reads segments as one parquet union (partition-pruned by
@@ -41,28 +42,11 @@ import org.apache.spark.sql.functions._
   * EXACTLY the index built without the deleted documents (global BM25
   * stats shift with the deletion, as they must). A deleted doc_id
   * stays dead even if re-appended (the subtraction can't tell the
-  * rows apart) until [[SegmentCompaction.vacuumedCopy]] — pass
-  * `Map("docs" -> Seq("doc_id"), "postings" -> Seq("doc_id"))`...
-  * except this face commits with per-PART markers rather than a
-  * segment marker, so vacuum/compact here means folding docs and
-  * postings as two flat stores; TombstoneSpec pins the filtered-read
-  * equality that makes any such rewrite safe.
+  * rows apart) until [[SegmentCompaction.vacuumedCopy]] folds both
+  * parts by doc_id ([[layout]]); TombstoneSpec pins the filtered-read
+  * equality that makes that rewrite safe.
   */
 object IncrementalIndex {
-
-  private def committedBatches(
-      fs: org.apache.hadoop.fs.FileSystem,
-      indexPath: Path): Seq[(Long, Path)] =
-    if (!fs.exists(indexPath)) Seq.empty
-    else fs.listStatus(indexPath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .flatMap(st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("batch=").toLong)
-          .toOption.map(id => (id, st.getPath)))
-      .filter { case (_, p) =>
-        fs.exists(new Path(p, "docs/_SUCCESS")) &&
-          fs.exists(new Path(p, "postings/_SUCCESS"))
-      }
 
   /** Append one batch of documents as an immutable index segment.
     * Idempotent per `batchId`: an already-committed id is a no-op, a
@@ -78,7 +62,8 @@ object IncrementalIndex {
     val spark = newDocs.sparkSession
     val indexPath = new Path(indexDir)
     val fs = indexPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (committedBatches(fs, indexPath).exists(_._1 == batchId)) return
+    if (StorePolicy.committed(fs, indexPath, marker = layout.commitMarker)
+      .exists(_._1 == batchId)) return
     // a tombstoned doc_id would be silently subtracted at load — reject
     Tombstones.requireNotTombstoned(newDocs.select(col(idCol)), idCol, indexDir)
     val seg = new Path(indexPath, s"batch=$batchId")
@@ -88,8 +73,10 @@ object IncrementalIndex {
       .select(col(idCol).as("doc_id"),
         graft.functions.exprs.term_freqs(col(textCol)).as("p"))
       .localCheckpoint(true)
-    // docs part first: commit marker is BOTH _SUCCESS files, so a
-    // crash between the writes leaves an uncommitted (ignored) segment
+    // docs part first, complete before postings starts: the commit
+    // marker is postings/_SUCCESS, so a postings marker implies a docs
+    // marker and a crash between the writes leaves an uncommitted
+    // (ignored) segment
     freqs.select(col("doc_id"), col("p.dl").as("dl"))
       .write.mode("overwrite").parquet(new Path(seg, "docs").toString)
     freqs.select(col("doc_id"), explode(col("p.freqs")).as("f"))
@@ -114,7 +101,8 @@ object IncrementalIndex {
       belowBatch: Long = Long.MaxValue): (DataFrame, DataFrame) = {
     val indexPath = new Path(indexDir)
     val fs = indexPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = committedBatches(fs, indexPath).filter(_._1 < belowBatch)
+    val committed = StorePolicy.committed(fs, indexPath, marker = layout.commitMarker)
+      .filter(_._1 < belowBatch)
     if (committed.isEmpty) {
       import spark.implicits._
       (Seq.empty[(Long, Long)].toDF("doc_id", "dl"),

@@ -40,16 +40,6 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalManifest {
 
-  private def committed(
-      fs: org.apache.hadoop.fs.FileSystem, dir: Path): Seq[(Long, Path)] =
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .flatMap(st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("batch=").toLong)
-          .toOption.map(id => (id, st.getPath)))
-      .filter { case (_, p) => fs.exists(new Path(p, "_SUCCESS")) }
-
   /** Ingest one id-ordered batch: the ladder's six stages, plus this
     * batch's `meta` segment (s2 survivors' id, source, tok,
     * signature). Meta derives from the COMMITTED verdict segment, so
@@ -74,7 +64,7 @@ object IncrementalManifest {
     val root = new Path(stateDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val metaDir = new Path(root, "meta")
-    if (!committed(fs, metaDir).exists(_._1 == batchId)) {
+    if (!StorePolicy.committed(fs, metaDir, marker = layout.commitMarker).exists(_._1 == batchId)) {
       val verd = spark.read.parquet(
         new Path(root, s"verdicts/batch=$batchId").toString)
       val s2docs = newDocs.join(
@@ -154,7 +144,7 @@ object IncrementalManifest {
     val old = new Path(stateDir + ".old")
     recover(fs, root, work, old)
     val present = subStores.map(new Path(root, _)).filter(p =>
-      committed(fs, p).nonEmpty)
+      StorePolicy.committed(fs, p, marker = layout.commitMarker).nonEmpty)
     val actionable = present.exists { p =>
       StorePolicy.decide(
         StorePolicy.statsOf(spark, p.toString, cfg, layout), cfg) !=
@@ -170,7 +160,8 @@ object IncrementalManifest {
       // otherwise compact the orphan verdicts to batch 0, destroying
       // the re-delivery repair path (ADVICE r17). With an empty metaIds
       // set the guard already fails loudly with the full missing list.
-      if (committed(fs, new Path(root, "verdicts")).nonEmpty)
+      if (StorePolicy.committed(fs, new Path(root, "verdicts"),
+        marker = layout.commitMarker).nonEmpty)
         requireMetaCoversVerdicts(fs, root, stateDir)
       present.foreach { p =>
         SegmentCompaction.compactedCopy(spark, p.toString,
@@ -229,8 +220,10 @@ object IncrementalManifest {
   private def requireMetaCoversVerdicts(
       fs: org.apache.hadoop.fs.FileSystem, root: Path,
       stateDir: String): Unit = {
-    val metaIds = committed(fs, new Path(root, "meta")).map(_._1).toSet
-    val missing = committed(fs, new Path(root, "verdicts")).map(_._1)
+    val metaIds = StorePolicy.committed(fs, new Path(root, "meta"),
+      marker = layout.commitMarker).map(_._1).toSet
+    val missing = StorePolicy.committed(fs, new Path(root, "verdicts"),
+      marker = layout.commitMarker).map(_._1)
       .filterNot(metaIds).sorted
     require(missing.isEmpty,
       s"ladder verdict batches [${missing.mkString(", ")}] have no " +
@@ -256,7 +249,7 @@ object IncrementalManifest {
       shardSalt: String = "p2e0_"): DataFrame = {
     val root = new Path(stateDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaSegs = committed(fs, new Path(root, "meta"))
+    val metaSegs = StorePolicy.committed(fs, new Path(root, "meta"), marker = layout.commitMarker)
     val metaPaths = metaSegs.map(_._2.toString)
     require(metaPaths.nonEmpty, s"no committed meta segments under $stateDir")
     // loud input contract (ADVICE r16): a crash between the ladder's

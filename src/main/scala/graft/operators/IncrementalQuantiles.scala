@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Incremental quantile maintenance — the streaming face of
   * [[SampleQuantiles]] (q54). A production pipeline tracks "p50/p90 so
@@ -38,24 +37,13 @@ import org.apache.spark.sql.functions._
   * Scale shape: a segment is ≤ groups × k rows of (g, v, h), sampled
   * by [[SampleQuantiles.bottomKSample]]'s one-job fold (the batch
   * never exchanges) and written from the driver; the merge is one
-  * distinct + one [[graft.functions.BottomKPairsAgg]] pass over
-  * segment-count × that — compact with
+  * distinct over segment-count × that, folded through the same
+  * per-group heap in one job — compact with
   * [[SegmentCompaction.compactedCopy]] when segment count grows.
   * Estimation runs driver-side on the groups × k merged sample
   * ([[SampleQuantiles.estimateFromSample]], the q13 pattern).
   */
 object IncrementalQuantiles {
-
-  private def committedBatches(
-      fs: org.apache.hadoop.fs.FileSystem,
-      statePath: Path): Seq[(Long, Path)] =
-    if (!fs.exists(statePath)) Seq.empty
-    else fs.listStatus(statePath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .flatMap(st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("batch=").toLong)
-          .toOption.map(id => (id, st.getPath)))
-      .filter { case (_, p) => fs.exists(new Path(p, "_SUCCESS")) }
 
   /** Append one batch's bottom-k sample as an immutable segment.
     * Idempotent per `batchId` (see class doc). Columns are normalized
@@ -73,7 +61,8 @@ object IncrementalQuantiles {
     val spark = batch.sparkSession
     val statePath = new Path(stateDir)
     val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (committedBatches(fs, statePath).exists(_._1 == batchId)) return
+    if (StorePolicy.committed(fs, statePath, marker = layout.commitMarker)
+      .exists(_._1 == batchId)) return
     SampleQuantiles.bottomKSample(batch, gCol, vCol, keyCol, k)
       .write.mode("overwrite")
       .parquet(new Path(statePath, s"batch=$batchId").toString)
@@ -90,16 +79,15 @@ object IncrementalQuantiles {
       k: Int = SampleQuantiles.DefaultK): DataFrame = {
     val statePath = new Path(stateDir)
     val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = committedBatches(fs, statePath).map(_._2.toString)
+    val dirs = StorePolicy.committed(fs, statePath, marker = layout.commitMarker)
+      .map(_._2.toString)
     require(dirs.nonEmpty, s"no committed batches under $stateDir")
-    spark.read.parquet(dirs: _*)
-      // KMV set semantics: a re-delivered pair is THE SAME pair
-      .dropDuplicates("g", "h", "v")
-      .groupBy(col("g"))
-      .agg(graft.functions.BottomKPairsAgg
-        .bottomKPairs(col("h"), col("v"), k).as("__mins"))
-      .select(col("g"), explode(col("__mins")).as("hv"))
-      .select(col("g"), col("hv.v").as("v"), col("hv.h").as("h"))
+    SampleQuantiles.bottomKByGroup(
+      spark.read.parquet(dirs: _*)
+        // KMV set semantics: a re-delivered pair is THE SAME pair (and a
+        // heap fed duplicates would evict distinct pairs)
+        .dropDuplicates("g", "h", "v"),
+      k)
   }
 
   /** Quantiles-so-far from state alone: (g, p, <outCol>). Equals the

@@ -38,17 +38,6 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalSpanCensus {
 
-  private def committedBatches(
-      fs: org.apache.hadoop.fs.FileSystem,
-      censusPath: Path): Seq[(Long, Path)] =
-    if (!fs.exists(censusPath)) Seq.empty
-    else fs.listStatus(censusPath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .flatMap(st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("batch=").toLong)
-          .toOption.map(id => (id, st.getPath)))
-      .filter { case (_, p) => fs.exists(new Path(p, "census/_SUCCESS")) }
-
   /** Append one batch's distinct-(doc, span) census as an immutable
     * segment. Idempotent per `batchId`: a committed id is a no-op, a
     * partial segment (crash mid-write) is overwritten with identical
@@ -73,7 +62,8 @@ object IncrementalSpanCensus {
     val spark = newDocs.sparkSession
     val censusPath = new Path(censusDir)
     val fs = censusPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (committedBatches(fs, censusPath).exists(_._1 == batchId)) return
+    if (StorePolicy.committed(fs, censusPath, marker = layout.commitMarker)
+      .exists(_._1 == batchId)) return
     val seg = new Path(censusPath, s"batch=$batchId")
     SpanDedup.docSpanHashes(newDocs, idCol, textCol, n)
       .groupBy(col("h")).agg(count(lit(1)).as("nd"))
@@ -87,7 +77,7 @@ object IncrementalSpanCensus {
   def load(spark: SparkSession, censusDir: String): DataFrame = {
     val censusPath = new Path(censusDir)
     val fs = censusPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = committedBatches(fs, censusPath)
+    val committed = StorePolicy.committed(fs, censusPath, marker = layout.commitMarker)
     if (committed.isEmpty) {
       import spark.implicits._
       Seq.empty[(Long, Long)].toDF("h", "nd")

@@ -3,40 +3,13 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Skew mitigation for aggregations: when one group key carries a
+/** Skew mitigation for self-joins: when one join key carries a
   * disproportionate share of rows (the classic hot-key shuffle
-  * straggler at 100 TB), aggregate in two phases — first on
-  * (key, salt) so the hot key's rows spread over `buckets` reducers,
-  * then combine the partials per key. The salt is a deterministic hash
-  * of a high-cardinality spread column, so re-runs are stable.
-  *
-  * AQE's skew-join splitting handles *joins*; this handles aggregation
-  * skew, which AQE does not repartition.
+  * straggler at 100 TB), salt the hot key's probe rows over `buckets`
+  * reducers and replicate its build rows across the salts. The salt is
+  * a deterministic hash of the id column, so re-runs are stable.
   */
 object Salting {
-
-  /** Sum/count aggregation with a salted first phase.
-    *
-    * @param spreadCol high-cardinality column used to derive the salt
-    */
-  def saltedAgg(
-      df: DataFrame,
-      keys: Seq[String],
-      sums: Seq[String],
-      spreadCol: Column,
-      buckets: Int = 16): DataFrame = {
-    val salted = df.withColumn("__salt", pmod(xxhash64(spreadCol), lit(buckets)))
-    val phase1 = salted
-      .groupBy((keys.map(col) :+ col("__salt")): _*)
-      .agg(
-        count(lit(1)).as("__cnt"),
-        sums.map(c => sum(col(c)).as(s"__sum_$c")): _*)
-    phase1
-      .groupBy(keys.map(col): _*)
-      .agg(
-        sum(col("__cnt")).as("n_rows"),
-        sums.map(c => sum(col(s"__sum_$c")).as(s"sum_$c")): _*)
-  }
 
   /** Skew-aware self-join for candidate-pair generation (LSH band
     * buckets, blocking keys): emits every pair `(id_a < id_b)` of rows

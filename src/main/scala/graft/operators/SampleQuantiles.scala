@@ -65,9 +65,19 @@ object SampleQuantiles {
     */
   def bottomKSample(
       df: DataFrame, gCol: Column, vCol: Column, keyCol: Column,
-      k: Int = DefaultK): DataFrame = {
-    val pairs = df.select(gCol.as("g"), vCol.cast("double").as("v"),
-        graft.functions.exprs.token_hash60(keyCol).as("h"))
+      k: Int = DefaultK): DataFrame =
+    bottomKByGroup(df.select(gCol.as("g"), vCol.cast("double").as("v"),
+      graft.functions.exprs.token_hash60(keyCol).as("h")), k)
+
+  /** The k (g, v, h) rows with smallest (h, v) per group of `frame`,
+    * NULL v or h skipped: one [[graft.functions.BottomKHeap]] per group
+    * per scan task, merged on the driver in ONE [[ModelFold]] job. The
+    * heap keeps a MULTISET, so a caller that wants set semantics
+    * deduplicates first. Returns a local frame, each group's pairs in
+    * (h, v) order.
+    */
+  private[operators] def bottomKByGroup(frame: DataFrame, k: Int): DataFrame = {
+    val pairs = frame.select(col("g"), col("v"), col("h"))
       .filter(col("v").isNotNull && col("h").isNotNull)
     val gField = pairs.schema("g")
     val gType = gField.dataType
@@ -83,7 +93,7 @@ object SampleQuantiles {
     val rows = heaps.toSeq.flatMap { case (g, heap) =>
       heap.sortedSlots.map(i => Row(g, heap.vs(i), heap.hs(i)))
     }
-    df.sparkSession.createDataFrame(
+    frame.sparkSession.createDataFrame(
       new java.util.ArrayList(scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
       StructType(Seq(gField,
         StructField("v", DoubleType, nullable = false),

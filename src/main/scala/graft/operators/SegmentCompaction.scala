@@ -46,17 +46,6 @@ import org.apache.spark.sql.SparkSession
   */
 object SegmentCompaction {
 
-  private def committedBatches(
-      fs: FileSystem, statePath: Path,
-      marker: String = "_SUCCESS"): Seq[(Long, Path)] =
-    if (!fs.exists(statePath)) Seq.empty
-    else fs.listStatus(statePath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .flatMap(st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("batch=").toLong)
-          .toOption.map(id => (id, st.getPath)))
-      .filter { case (_, p) => fs.exists(new Path(p, marker)) }
-
   /** Union-read one part across segments and write it into the output
     * segment, preserving any physical partitioning the layout declares
     * for it (per-dir basePath reads — a naive multi-path read trips
@@ -112,14 +101,14 @@ object SegmentCompaction {
       layout: StorePolicy.Layout = StorePolicy.Layout()): Int = {
     val inPath = new Path(inStore)
     val fs = inPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val segs = committedBatches(fs, inPath, layout.commitMarker)
+    val segs = StorePolicy.committed(fs, inPath, marker = layout.commitMarker)
     require(segs.nonEmpty, s"no committed batches under $inStore")
     val outPath = new Path(outStore)
     // gate on committed BATCHES only: a crash between the tombstone
     // carry below and the batch fold leaves committed delete=0 rows,
     // and the retry must sail past them (it overwrites with identical
     // deterministic contents)
-    require(committedBatches(fs, outPath).isEmpty,
+    require(StorePolicy.committed(fs, outPath).isEmpty,
       s"$outStore already holds committed segments")
     val outSeg = new Path(outPath, "batch=0")
     fs.delete(outSeg, true) // a crashed (uncommitted) prior attempt
@@ -176,11 +165,11 @@ object SegmentCompaction {
       layout: StorePolicy.Layout = StorePolicy.Layout()): Int = {
     val inPath = new Path(inStore)
     val fs = inPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val segs = committedBatches(fs, inPath, layout.commitMarker)
+    val segs = StorePolicy.committed(fs, inPath, marker = layout.commitMarker)
     require(segs.nonEmpty, s"no committed batches under $inStore")
     val outPath = new Path(outStore)
-    require(committedBatches(fs, outPath).isEmpty &&
-      Tombstones.committedDeletes(fs, outPath).isEmpty,
+    require(StorePolicy.committed(fs, outPath).isEmpty &&
+      StorePolicy.committed(fs, outPath, "delete=").isEmpty,
       s"$outStore already holds committed segments")
     val outSeg = new Path(outPath, "batch=0")
     fs.delete(outSeg, true)

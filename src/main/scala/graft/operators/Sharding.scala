@@ -45,25 +45,4 @@ object Sharding {
       .withColumn("pos", row_number().over(w).cast("long"))
       .select(col(idCol), col("shard"), col("pos"))
   }
-
-  /** RESHARD-STABLE shard assignment — jump consistent hashing
-    * (Lamport & Veach 2014) over the same salted portable hash.
-    * [[epochShuffle]]'s `pmod(hash, n)` is the right tool WITHIN an
-    * epoch, but growing a 100 TB store's shard count with mod moves
-    * nearly EVERY key (full rewrite); jump hashing moves an expected
-    * 1/(n+1) fraction per added shard — the minimal possible — so an
-    * incremental store reshards by rewriting only the moved keys.
-    * One codegen'd projection, zero shuffle (the shard column is the
-    * write-partitioning key, not an exchange).
-    */
-  def consistentShards(
-      docs: DataFrame,
-      idCol: String,
-      salt: String,
-      nShards: Int): DataFrame = {
-    val h = graft.functions.exprs.token_hash60(
-      concat(lit(salt), col(idCol).cast("string")))
-    docs.select(col(idCol),
-      graft.functions.exprs.jump_bucket(h, nShards).cast("long").as("shard"))
-  }
 }

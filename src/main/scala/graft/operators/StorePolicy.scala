@@ -54,7 +54,9 @@ object StorePolicy {
     *    their LAST-WRITTEN part's parquet marker name it here
     *    (`postings/_SUCCESS`, `codes/_SUCCESS`, `edges/_SUCCESS`,
     *    `census/_SUCCESS`) — without it the policy would see zero
-    *    committed segments and never fire.
+    *    committed segments and never fire. The face's own readers
+    *    pass this same marker to [[committed]], so reads, the policy
+    *    and compaction judge commitment by one marker.
     *  - `idColsByPart`: vacuum's id columns per part
     *    ([[SegmentCompaction.vacuumedCopy]]'s contract; flat stores
     *    key on `""`).
@@ -96,14 +98,23 @@ object StorePolicy {
       smallFileRatio: Double = 0.5,
       vacuumTombstoneBytes: Long = 8L * 1024 * 1024)
 
-  private def committed(
-      fs: FileSystem, statePath: Path, prefix: String,
-      marker: String = "_SUCCESS"): Seq[Path] =
+  /** The committed segments under `statePath`, as `(id, path)` pairs:
+    * the `<prefix><id>` directories that hold `marker`. A directory
+    * whose id does not parse is not a segment. This is the one commit
+    * rule every incremental face, [[SegmentCompaction]] and this
+    * policy read by, so a segment is committed for all of them or for
+    * none.
+    */
+  private[graft] def committed(
+      fs: FileSystem, statePath: Path, prefix: String = "batch=",
+      marker: String = "_SUCCESS"): Seq[(Long, Path)] =
     if (!fs.exists(statePath)) Seq.empty
     else fs.listStatus(statePath).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-      .map(_.getPath)
-      .filter(p => fs.exists(new Path(p, marker)))
+      .flatMap(st =>
+        scala.util.Try(st.getPath.getName.stripPrefix(prefix).toLong)
+          .toOption.map(id => (id, st.getPath)))
+      .filter { case (_, p) => fs.exists(new Path(p, marker)) }
 
   /** Walk the store once: committed `batch=` segments' parquet data
     * files (recursive — multi-part segments keep data under named
@@ -116,7 +127,7 @@ object StorePolicy {
       layout: Layout = Layout()): StoreStats = {
     val statePath = new Path(stateDir)
     val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val segs = committed(fs, statePath, "batch=", layout.commitMarker)
+    val segs = committed(fs, statePath, marker = layout.commitMarker).map(_._2)
     def dataFilesUnder(p: Path): Seq[Long] = {
       val it = fs.listFiles(p, true)
       val sizes = scala.collection.mutable.ArrayBuffer[Long]()
@@ -130,7 +141,7 @@ object StorePolicy {
     }
     val sizes = segs.flatMap(dataFilesUnder)
     val tombBytes = committed(fs, statePath, "delete=")
-      .flatMap(dataFilesUnder).sum
+      .map(_._2).flatMap(dataFilesUnder).sum
     StoreStats(
       committedSegments = segs.size,
       dataFiles = sizes.size,
@@ -224,7 +235,7 @@ object StorePolicy {
     if (action != NoOp) {
       // maintained copies always commit with a segment-level marker
       // (flat: Spark's own; multi-part: manual, written last)
-      require(committed(fs, work, "batch=").nonEmpty,
+      require(committed(fs, work).nonEmpty,
         s"maintenance copy at $work did not commit")
       // carry store-level AUX state the copy does not produce (e.g.
       // IncrementalAnn's frozen `model/`) — everything that is not a
@@ -260,7 +271,7 @@ object StorePolicy {
       fs: FileSystem, statePath: Path, work: Path, old: Path): Unit = {
     if (fs.exists(old)) {
       if (!fs.exists(statePath)) {
-        if (committed(fs, work, "batch=").nonEmpty) {
+        if (committed(fs, work).nonEmpty) {
           require(fs.rename(work, statePath),
             s"recovery: rename $work -> $statePath failed")
         } else {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -39,16 +39,6 @@ import org.apache.spark.sql.functions._
   */
 object Tombstones {
 
-  /** Committed tombstone segments (`delete=<id>` with `_SUCCESS`). */
-  def committedDeletes(fs: FileSystem, statePath: Path): Seq[(Long, Path)] =
-    if (!fs.exists(statePath)) Seq.empty
-    else fs.listStatus(statePath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("delete="))
-      .flatMap(st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("delete=").toLong)
-          .toOption.map(id => (id, st.getPath)))
-      .filter { case (_, p) => fs.exists(new Path(p, "_SUCCESS")) }
-
   /** Commit one delete batch. Idempotent per `deleteId`; `ids` must
     * carry the id column named by `idCol`.
     */
@@ -56,7 +46,7 @@ object Tombstones {
     val spark = ids.sparkSession
     val statePath = new Path(stateDir)
     val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (committedDeletes(fs, statePath).exists(_._1 == deleteId)) return
+    if (StorePolicy.committed(fs, statePath, "delete=").exists(_._1 == deleteId)) return
     // explicit delete-before-write, mirroring the batch segments'
     // writeSegment crash protocol: mode("overwrite") would clear the
     // directory anyway, but making the cleanup explicit keeps the
@@ -82,7 +72,7 @@ object Tombstones {
   def deletedIds(spark: SparkSession, stateDir: String): Option[DataFrame] = {
     val statePath = new Path(stateDir)
     val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val segs = committedDeletes(fs, statePath)
+    val segs = StorePolicy.committed(fs, statePath, "delete=")
     if (segs.isEmpty) None
     else Some(spark.read.parquet(segs.map(_._2.toString): _*).distinct())
   }

@@ -227,10 +227,10 @@ object IncrementalProbe {
       val committedCodes = {
         val p = new org.apache.hadoop.fs.Path(dir)
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.listStatus(p).toSeq.map(_.getPath.getName)
-          .filter(_.startsWith("batch="))
-          .map(b => spark.read.option("basePath", s"$dir/$b/codes")
-            .parquet(s"$dir/$b/codes").select(codeCols: _*))
+        graft.operators.StorePolicy.committed(fs, p,
+          marker = graft.operators.IncrementalAnn.layout().commitMarker)
+          .map { case (_, b) => spark.read.option("basePath", s"$b/codes")
+            .parquet(s"$b/codes").select(codeCols: _*) }
           .reduce(_.unionByName(_))
       }
       val oneCodes = graft.operators.ProductQuantizer.encode(

@@ -3,37 +3,9 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.core.Tables
 
 class SaltingSpec extends SparkSpec {
   import spark.implicits._
-
-  test("salted two-phase aggregation == plain groupBy on a skewed key") {
-    val li = Tables.lineitem(spark, sfDir)
-    val salted = Salting.saltedAgg(
-      li, Seq("l_returnflag"), Seq("l_quantity", "l_extendedprice"),
-      spreadCol = $"l_orderkey", buckets = 16)
-      .select($"l_returnflag", $"n_rows",
-        round($"sum_l_quantity", 4).as("q"), round($"sum_l_extendedprice", 2).as("p"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSet
-    val plain = li.groupBy($"l_returnflag")
-      .agg(count(lit(1)).as("n_rows"),
-        round(sum($"l_quantity"), 4).as("q"), round(sum($"l_extendedprice"), 2).as("p"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSet
-    assert(salted == plain)
-  }
-
-  test("salt actually spreads a hot key across buckets") {
-    val hot = Seq.fill(1000)(("hot", 1.0)) ++ Seq(("cold", 2.0))
-    val df = hot.toDF("k", "v").withColumn("id", monotonically_increasing_id())
-    val phase1Groups = df
-      .withColumn("__salt", pmod(xxhash64($"id"), lit(8)))
-      .groupBy($"k", $"__salt").count()
-    assert(phase1Groups.filter($"k" === "hot").count() > 1,
-      "hot key must split into multiple salted partials")
-    val out = Salting.saltedAgg(df, Seq("k"), Seq("v"), $"id", buckets = 8)
-    assert(out.filter($"k" === "hot").head().getAs[Double]("sum_v") == 1000.0)
-  }
 
   test("skewSelfJoinPairs == plain self-join pairs, each pair exactly once") {
     // key "hot" has 30 members (above threshold → salted path), "warm"

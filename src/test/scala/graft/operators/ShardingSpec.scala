@@ -37,49 +37,4 @@ class ShardingSpec extends SparkSpec {
     assert(before.forall { case (id, s) => after(id) == s },
       "shard assignment must be a pure function of (salt, id)")
   }
-
-  private val bigDocs = (1L to 4000L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
-
-  private def jumpOf(n: Int): Map[Long, Long] =
-    Sharding.consistentShards(bigDocs, "doc_id", "store_", n)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-  test("jump shards: valid range, deterministic, roughly uniform") {
-    val a = jumpOf(8)
-    assert(a.values.forall(s => s >= 0 && s < 8))
-    assert(a == jumpOf(8), "same (salt, id, n) must reassign identically")
-    val sizes = a.values.groupBy(identity).map(_._2.size)
-    assert(sizes.size == 8 && sizes.min > 4000 / 8 / 2,
-      s"shard sizes badly skewed: $sizes")
-  }
-
-  test("jump shards move ~1/(n+1) of keys when a shard is added; mod moves ~all") {
-    val (a, b) = (jumpOf(8), jumpOf(9))
-    val moved = a.count { case (id, s) => b(id) != s }.toDouble / a.size
-    assert(moved < 0.2, f"jump moved $moved%.3f of keys for 8->9 (expect ~0.111)")
-    // every jump-moved key lands on the NEW shard — the minimal-
-    // disruption property mod lacks
-    a.foreach { case (id, s) =>
-      if (b(id) != s) assert(b(id) == 8L, s"key $id moved to old shard ${b(id)}")
-    }
-    def modOf(n: Long) = Sharding.epochShuffle(bigDocs, "doc_id", "store_", n)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val (ma, mb) = (modOf(8L), modOf(9L))
-    val modMoved = ma.count { case (id, s) => mb(id) != s }.toDouble / ma.size
-    assert(modMoved > 0.75, f"mod resharding moved only $modMoved%.3f — unexpected")
-  }
-
-  test("jump kernel matches the published reference behavior on small cases") {
-    import graft.functions.TextExprImpl.jumpBucket
-    assert((0 until 100).forall(i => jumpBucket(i.toLong * 7919L, 1) == 0),
-      "n=1 must always be bucket 0")
-    // monotone growth: a key's bucket under n+1 is either unchanged or n
-    (1 to 32).foreach { n =>
-      (0 until 200).foreach { i =>
-        val k = i.toLong * 2654435761L
-        val (s, t) = (jumpBucket(k, n), jumpBucket(k, n + 1))
-        assert(t == s || t == n, s"key $k jumped $s -> $t at n=$n")
-      }
-    }
-  }
 }

@@ -195,14 +195,14 @@ class TombstoneSpec extends SparkSpec {
     SegmentCompaction.compactedCopy(spark, graphStore, carried)
     assert(graphRows(carried) == graphRows(graphStore),
       "compacted copy serves a different graph")
-    assert(Tombstones.committedDeletes(fs(carried), new Path(carried)).nonEmpty,
+    assert(StorePolicy.committed(fs(carried), new Path(carried), "delete=").nonEmpty,
       "tombstones dropped by compaction — deleted rows resurrected")
 
     val clean = freshDir("ts_vacuum")
     IncrementalGraphAnn.vacuumedCopy(spark, graphStore, clean)
     assert(graphRows(clean) == graphRows(graphStore),
       "vacuumed copy serves a different graph")
-    assert(Tombstones.committedDeletes(fs(clean), new Path(clean)).isEmpty,
+    assert(StorePolicy.committed(fs(clean), new Path(clean), "delete=").isEmpty,
       "vacuumed store still holds tombstones")
     // physically absent, not just filtered
     val rawVecs = IncrementalGraphAnn
