@@ -191,7 +191,11 @@ object DataQuality {
   */
 final case class DqRun(summary: DqSummary, blsNullCriticalRows: Long)
 
-/** Schema of the append-only DQ run log (one wide row per run). */
+/** Schema of the append-only DQ run log (one wide row per run).
+  * `recomputed` is false on a row whose counts a pipeline run carried
+  * over from the previous run, on unchanged input, instead of
+  * measuring them.
+  */
 final case class DqSummary(
     bls_rows: Long,
     bls_distinct_series_id: Long,
@@ -203,4 +207,5 @@ final case class DqSummary(
     bls_negative_values: Long,
     population_non_positive_values: Long,
     bls_outlier_rows_iqr: Long,
-    run_utc: String)
+    run_utc: String,
+    recomputed: Boolean = true)

@@ -41,6 +41,15 @@ object BlsMirrorSync {
       .filter(f => f.nonEmpty && f.startsWith("pr."))
       .sorted
 
+  /** A write-once run record's id: the UTC second, then a hash seeded
+    * with the full-precision instant, so two runs in the same second
+    * (common in tests, impossible in the daily schedule) still get
+    * distinct records.
+    */
+  def runId(start: Instant, seed: String): String =
+    DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss'Z'").withZone(ZoneOffset.UTC).format(start) +
+      "_" + Hashing.sha256(s"$start|$seed".getBytes("UTF-8")).take(8)
+
   def run(
       fetcher: HttpFetcher,
       store: FileStore,
@@ -48,12 +57,7 @@ object BlsMirrorSync {
       now: () => Instant = () => Instant.now()): BlsRunMeta = {
     val start = now()
     val runUtc = DateTimeFormatter.ISO_INSTANT.format(start.truncatedTo(java.time.temporal.ChronoUnit.SECONDS))
-    // seed with the full-precision instant so two runs in the same
-    // second (common in tests, impossible in the daily schedule) still
-    // get distinct write-once run records
-    val runId = DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss'Z'")
-      .withZone(ZoneOffset.UTC).format(start) + "_" +
-      Hashing.sha256(s"$start|${config.dataSource}|${config.targetDir}".getBytes("UTF-8")).take(8)
+    val runId = BlsMirrorSync.runId(start, s"${config.dataSource}|${config.targetDir}")
 
     val metaDir = s"${config.targetDir}/_meta"
     val runsDir = s"$metaDir/runs"

@@ -1,5 +1,6 @@
 package graft.ingest
 
+import java.io.InputStream
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.security.MessageDigest
 
@@ -52,6 +53,16 @@ object Hashing {
     * uploaded/updated/skipped idempotency (10_ingest_bls.ipynb:122-123).
     */
   def sha256(bytes: Array[Byte]): String =
-    MessageDigest.getInstance("SHA-256").digest(bytes)
-      .map(b => f"$b%02x").mkString
+    hex(MessageDigest.getInstance("SHA-256").digest(bytes))
+
+  /** The same digest of a stream, read to its end. */
+  def sha256(in: InputStream): String = {
+    val md = MessageDigest.getInstance("SHA-256")
+    val buf = new Array[Byte](1 << 16)
+    var n = in.read(buf)
+    while (n >= 0) { md.update(buf, 0, n); n = in.read(buf) }
+    hex(md.digest())
+  }
+
+  private[graft] def hex(digest: Array[Byte]): String = digest.map(b => f"$b%02x").mkString
 }

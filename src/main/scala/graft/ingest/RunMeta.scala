@@ -49,4 +49,6 @@ object Json {
 
   def readMap(s: String): Map[String, Any] =
     mapper.readValue(s, classOf[Map[String, Any]])
+
+  def read[T](s: String, cls: Class[T]): T = mapper.readValue(s, cls)
 }

@@ -3,6 +3,7 @@ package graft.operators
 import scala.collection.mutable
 import scala.reflect.ClassTag
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 
@@ -21,15 +22,26 @@ import org.apache.spark.sql.catalyst.InternalRow
   * `Math.addExact` (as [[sumByKey]] and [[addExact]] do), so an
   * overflow fails the way ANSI `sum` does instead of wrapping. An
   * empty input (even one with no partitions) yields `zero()`.
+  *
+  * The job is one `SparkContext.runJob` whose task function is
+  * defined here, and the driver merges the partials in partition
+  * order. Spark's closure cleaner then scans only this object's
+  * class, not `RDD`'s as the closures of `mapPartitions` and
+  * `treeReduce` made it do on every fold.
   */
 object ModelFold {
 
   def apply[A: ClassTag](df: DataFrame)(zero: () => A)(
       add: (A, InternalRow) => A, merge: (A, A) => A): A = {
-    val partials = df.queryExecution.toRdd
-      .mapPartitions(rows => Iterator.single(rows.foldLeft(zero())(add)))
-    if (partials.getNumPartitions == 0) zero() else partials.treeReduce(merge)
+    val rows = df.queryExecution.toRdd
+    // runJob over no partitions would still post a job
+    if (rows.getNumPartitions == 0) zero()
+    else rows.sparkContext.runJob(rows, foldPartition(zero, add)).reduceLeft(merge)
   }
+
+  private def foldPartition[A](zero: () => A, add: (A, InternalRow) => A)
+      : (TaskContext, Iterator[InternalRow]) => A =
+    (_, rows) => rows.foldLeft(zero())(add)
 
   /** Σ `n(row)` per `key(row)` over a key space bounded by the model;
     * a NULL key is a key of its own, as in `groupBy`.

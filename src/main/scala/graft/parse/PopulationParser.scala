@@ -2,7 +2,7 @@ package graft.parse
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType}
+import org.apache.spark.sql.types._
 
 /** Parser for the DataUSA `population.json` document
   * (`{annotations, columns, data: [{Nation, "Nation ID", Population,
@@ -17,6 +17,18 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType}
   */
 object PopulationParser {
 
+  /** The part of the document `parse` reads. Giving it to the reader
+    * spares the schema-inference job a multiLine JSON read otherwise
+    * runs first. `Year` and `Population` are strings, so a number
+    * keeps its literal text and `try_cast` parses that text; a
+    * document without `data` reads as one row with a null `data`,
+    * which explodes into no rows.
+    */
+  private val documentSchema = StructType(Seq(
+    StructField("data", ArrayType(StructType(Seq(
+      StructField("Year", StringType),
+      StructField("Population", StringType)))))))
+
   /** Normalize from the raw JSON read (must contain a `data` array). */
   def parse(rawJson: DataFrame): DataFrame =
     rawJson
@@ -29,5 +41,5 @@ object PopulationParser {
 
   /** Parse straight from a file path (S2 multiLine JSON scan). */
   def parseFile(spark: SparkSession, path: String): DataFrame =
-    parse(spark.read.option("multiLine", "true").json(path))
+    parse(spark.read.schema(documentSchema).option("multiLine", "true").json(path))
 }

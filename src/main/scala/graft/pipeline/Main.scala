@@ -42,15 +42,18 @@ final class LocalDirFetcher(sourceDir: String, apiFileName: String = "population
 
 /** CLI entry point: run the full reference-shaped pipeline (BLS mirror
   * sync ∥ population ingest → analytics + DQ) against a local source
-  * directory, then print the ingest reports, the DQ row's counts and
-  * the published tables.
+  * directory, then print the ingest reports, the DQ row's counts, the
+  * analytics run record (recomputed or skipped, wall time and jobs per
+  * round, rows per table) and the published tables.
   *
   * The raw zone lands under `workDir`; the published tables persist as
   * parquet directories in the warehouse, `spark-warehouse/<database>.db/`
   * under the current working directory (see [[TableSink]]). A run from
   * the same working directory therefore replaces the three curated
   * tables and appends one row to the `dq_summary_runlog` the earlier
-  * runs left.
+  * runs left; when neither the raw files nor the engine nor the
+  * session config changed, it keeps the tables as they are and
+  * appends a row marked `recomputed=false` ([[Pipeline.analyze]]).
   *
   * Usage: runMain graft.pipeline.Main <sourceDir> <workDir> [database]
   */
@@ -82,8 +85,16 @@ object Main {
       .filterNot(_._1 == "run_utc")
       .map { case (k, v) => s"$k=$v" }
       .mkString("dq: ", " ", ""))
+    val run = report.analytics
+    println(s"analytics: ${if (run.recomputed) "recomputed" else "skipped (unchanged input)"} " +
+      f"wall_s=${run.wall_s}%.3f run_id=${run.run_id}")
+    def printRound(r: RoundMeta, indent: String): Unit = {
+      println(f"${indent}round ${r.name}: wall_s=${r.wall_s}%.3f jobs=${r.jobs}")
+      r.concurrent.foreach(printRound(_, indent + "  "))
+    }
+    run.rounds.foreach(printRound(_, "  "))
     report.publishedTables.foreach { t =>
-      println(s"published $t rows=${spark.table(t).count()}")
+      println(s"published $t rows=${run.tables(t).rows}")
     }
     spark.table(s"$db.report_prs30006032_q01").show(40, truncate = false)
     spark.stop()

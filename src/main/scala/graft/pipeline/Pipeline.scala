@@ -2,10 +2,12 @@ package graft.pipeline
 
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.util.Try
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.analytics.Analytics
 import graft.dq.{DataQuality, DqRun, DqSummary}
@@ -37,7 +39,11 @@ final case class PipelineReport(
     blsSync: BlsRunMeta,
     populationIngest: PopulationRunMeta,
     publishedTables: Seq[String],
-    dq: DqSummary)
+    analytics: AnalyticsRunMeta) {
+
+  /** The DQ row the analytics stage appended. */
+  def dq: DqSummary = analytics.dq.get.summary
+}
 
 /** Publish sinks (K1/K2): parquet saveAsTable with the reference's
   * overwrite / append semantics (Delta jars are absent in this
@@ -53,39 +59,55 @@ final case class PipelineReport(
   *  - `overwrite` deletes it, then writes the latest snapshot;
   *  - `append` adopts it as the table (the schema is the written
   *    frame's, so no inference job runs), then appends, so the
-  *    `dq_summary_runlog` history survives restarts.
+  *    `dq_summary_runlog` history survives restarts;
+  *  - `adopt` registers it with a known schema, as an external table
+  *    (`Pipeline.analyze` does so on unchanged input); a later
+  *    `overwrite` replaces it the same way.
   */
 object TableSink {
+
+  /** `<spark.sql.warehouse.dir>/<database>.db`. */
+  def databaseDir(spark: SparkSession, database: String): Path =
+    new Path(s"${spark.conf.get("spark.sql.warehouse.dir")}/$database.db")
+
+  /** The warehouse directory of `table` (`db.table` or `table`). */
+  def location(spark: SparkSession, table: String): Path = table.split('.') match {
+    case Array(db, t) => new Path(databaseDir(spark, db), t)
+    case Array(t) => new Path(spark.conf.get("spark.sql.warehouse.dir"), t)
+  }
 
   /** The warehouse directory of `table`, when it exists and the
     * catalog does not know the table: what a previous JVM left.
     */
   private def orphanLocation(spark: SparkSession, table: String): Option[Path] =
     if (spark.catalog.tableExists(table)) None
-    else {
-      val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-      val rel = table.split('.') match {
-        case Array(db, t) => s"$db.db/$t"
-        case Array(t) => t
-      }
-      val path = new Path(s"$warehouse/$rel")
-      Some(path).filter(p => p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-    }
+    else Some(location(spark, table))
+      .filter(p => p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
 
   def overwrite(df: DataFrame, table: String): Unit = {
     val spark = df.sparkSession
+    // A directory `adopt` registered is an external table, which
+    // `saveAsTable` cannot replace by a managed one in place: forget it
+    // (its files stay), then replace it as an orphan.
+    if (spark.catalog.tableExists(table) && spark.catalog.getTable(table).tableType == "EXTERNAL")
+      spark.sql(s"DROP TABLE $table")
     orphanLocation(spark, table).foreach { p =>
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
     df.write.mode("overwrite").format("parquet").saveAsTable(table)
   }
 
-  def append(df: DataFrame, table: String): Unit = {
-    orphanLocation(df.sparkSession, table).foreach { p =>
-      // Spark writes every parquet column as nullable
-      val schema = StructType(df.schema.fields.map(_.copy(nullable = true)))
-      df.sparkSession.catalog.createTable(table, "parquet", schema, Map("path" -> p.toString))
+  /** Registers the directory a previous JVM left for `table`, if any,
+    * as the table, with `schema`, so no inference job runs.
+    */
+  def adopt(spark: SparkSession, table: String, schema: StructType): Unit =
+    orphanLocation(spark, table).foreach { p =>
+      spark.catalog.createTable(table, "parquet", schema, Map("path" -> p.toString))
     }
+
+  def append(df: DataFrame, table: String): Unit = {
+    // Spark writes every parquet column as nullable
+    adopt(df.sparkSession, table, StructType(df.schema.fields.map(_.copy(nullable = true))))
     df.write.mode("append").format("parquet").saveAsTable(table)
   }
 }
@@ -118,45 +140,128 @@ object Pipeline {
 
   /** Task C: parse the raw zone, publish the three curated tables,
     * append the DQ run log, validate (20_analytics.ipynb cell 14).
-    * Returns the DQ row it appended.
+    * Returns the DQ row it appended. See [[analyze]].
+    */
+  def runAnalytics(spark: SparkSession, config: PipelineConfig)(
+      implicit ec: ExecutionContext): DqSummary =
+    analyze(spark, config).dq.get.summary
+
+  /** Task C with its run record ([[AnalyticsRunMeta]]), which it
+    * writes under `<db>.db/_meta/` and returns.
     *
-    * The three overwrites and the DQ metrics (`DataQuality.measure`)
-    * are independent, so they run concurrently as `Future`s on `ec`:
-    * at the reference's input size their jobs are one task each, and
-    * the cores would otherwise sit idle. Their Spark jobs carry the
-    * local properties (job group, scheduler pool) of the pool threads,
-    * not the caller's. Once all four have finished, the DQ row is
-    * appended and `validate` runs on the counts the metrics hold.
+    * Unchanged input: when the latest record is a successful run
+    * with this run's content key ([[AnalyticsRun.contentKey]]) and
+    * input digests, and every table directory still holds the files it
+    * lists, the run does not parse, publish or measure. It adopts the
+    * directories the catalog does not know (as `TableSink.append` does
+    * for the run log), appends a run-log row that carries the recorded
+    * counts with `recomputed = false`, and validates. Anything else
+    * takes the full path below.
+    *
+    * The full path: the three overwrites and the DQ metrics
+    * (`DataQuality.measure`) are independent, so they run concurrently
+    * as `Future`s on `ec`: at the reference's input size their jobs
+    * are one task each, and the cores would otherwise sit idle. Once
+    * all four have finished, the DQ row is appended and `validate`
+    * runs on the counts the metrics hold.
     *
     * Failure: the first failed round, in the order writes then
     * metrics, is rethrown after every round has finished, so nothing
     * is still writing when this throws. The other writes may already
     * have landed, and no DQ row is appended. A run that fails
     * `validate` has appended its DQ row, which records the bad input.
+    * Either way the run leaves a `failed` record, which the next run
+    * does not reuse.
+    *
+    * @param engine the engine digest in the content key
     */
-  def runAnalytics(spark: SparkSession, config: PipelineConfig)(
-      implicit ec: ExecutionContext): DqSummary = {
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS ${config.database}")
+  private[pipeline] def analyze(
+      spark: SparkSession,
+      config: PipelineConfig,
+      engine: => String = AnalyticsRun.engineDigest)(
+      implicit ec: ExecutionContext): AnalyticsRunMeta = {
     val db = config.database
+    val tables = publishedTables(db)
+    val start = java.time.Instant.now()
+    val t0 = System.nanoTime()
+    val runId = BlsMirrorSync.runId(start, s"analytics|$db")
+    val clock = new RoundClock(spark.sparkContext, runId)
+    var key = ""
+    var inputs = Map.empty[String, String]
+    var recomputed = true
+    var dq: Option[DqRun] = None
+    var published = Map.empty[String, TableMeta]
 
-    val bls = BlsParser.parseFile(spark, s"${config.blsTargetDir}/${config.blsFileName}")
-    val population = PopulationParser.parseFile(spark, config.populationTargetPath)
+    def record(status: String, error: Option[String]): AnalyticsRunMeta = {
+      val wall = (System.nanoTime() - t0) / 1e9
+      val meta = AnalyticsRunMeta(runId, start.toString, status, error, recomputed, key,
+        inputs, dq, published, wall, clock.rounds())
+      AnalyticsRun.write(spark, db, meta)
+      meta
+    }
 
-    val tables @ Seq(stats, best, report) = publishedTables(db)
-    val writes = Seq(
-      stats -> Analytics.populationStats(population),
-      best -> Analytics.bestYearBySeries(bls),
-      report -> Analytics.reportSeriesQ01(bls, population))
-      .map { case (name, df) => Future(TableSink.overwrite(df, name)) }
-    val metrics = Future(DataQuality.measure(bls, population))
-    val rounds = writes :+ metrics
-    rounds.foreach(Await.ready(_, Duration.Inf))
-    rounds.foreach(_.value.get.get) // rethrows the first failure
-    val dq = metrics.value.get.get
+    try {
+      val previous = clock("check") {
+        spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+        key = AnalyticsRun.contentKey(spark, config, engine)
+        inputs = AnalyticsRun.inputDigests(spark, config)
+        AnalyticsRun.latest(spark, db)
+          .filter(AnalyticsRun.reusable(spark, _, key, inputs, tables))
+      }
+      previous match {
+        case Some(prev) =>
+          recomputed = false
+          clock("adopt")(prev.tables.foreach { case (t, m) =>
+            TableSink.adopt(spark, t, DataType.fromJson(m.schema).asInstanceOf[StructType])
+          })
+          val was = prev.dq.get
+          dq = Some(was.copy(summary = was.summary.copy(
+            run_utc = java.time.Instant.now().toString, recomputed = false)))
+          published = prev.tables
+        case None =>
+          val measured = recompute(spark, config, tables, clock)
+          dq = Some(measured)
+          published = clock("describe")(tables.map(t => t -> AnalyticsRun.describe(spark, t)).toMap)
+      }
+      val run = dq.get
+      clock("append")(
+        TableSink.append(spark.createDataFrame(Seq(run.summary)), s"$db.dq_summary_runlog"))
+      clock("validate")(validate(spark, run, tables))
+    } catch {
+      case NonFatal(e) =>
+        Try(record("failed", Some(e.toString))).failed.foreach(e.addSuppressed)
+        throw e
+    }
+    record("success", None)
+  }
 
-    TableSink.append(spark.createDataFrame(Seq(dq.summary)), s"$db.dq_summary_runlog")
-    validate(spark, dq, tables)
-    dq.summary
+  /** The full path: parse, then the three overwrites and the DQ metrics
+    * as concurrent rounds inside one `publish` round.
+    */
+  private def recompute(
+      spark: SparkSession,
+      config: PipelineConfig,
+      tables: Seq[String],
+      clock: RoundClock)(implicit ec: ExecutionContext): DqRun = {
+    val (bls, population) = clock("parse")((
+      BlsParser.parseFile(spark, s"${config.blsTargetDir}/${config.blsFileName}"),
+      PopulationParser.parseFile(spark, config.populationTargetPath)))
+    val Seq(stats, best, report) = tables
+    clock("publish") {
+      val inPublish = Some("publish")
+      val writes = Seq(
+        stats -> Analytics.populationStats(population),
+        best -> Analytics.bestYearBySeries(bls),
+        report -> Analytics.reportSeriesQ01(bls, population))
+        .map { case (name, df) =>
+          Future(clock(s"write $name", inPublish)(TableSink.overwrite(df, name)))
+        }
+      val metrics = Future(clock("dq metrics", inPublish)(DataQuality.measure(bls, population)))
+      val rounds = writes :+ metrics
+      rounds.foreach(Await.ready(_, Duration.Inf))
+      rounds.foreach(_.value.get.get) // rethrows the first failure
+      metrics.value.get.get
+    }
   }
 
   /** Inline validation (20_analytics.ipynb:3108-3172): non-empty
@@ -179,7 +284,7 @@ object Pipeline {
       store: FileStore,
       config: PipelineConfig)(implicit ec: ExecutionContext): PipelineReport = {
     val (blsMeta, popMeta) = runIngest(fetcher, store, config)
-    val dq = runAnalytics(spark, config)
-    PipelineReport(blsMeta, popMeta, publishedTables(config.database), dq)
+    val analytics = analyze(spark, config)
+    PipelineReport(blsMeta, popMeta, publishedTables(config.database), analytics)
   }
 }

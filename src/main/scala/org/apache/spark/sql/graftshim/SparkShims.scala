@@ -24,4 +24,11 @@ object SparkShims {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "scala_udf")
+
+  /** Waits until the listener bus has delivered every event posted so
+    * far (`listenerBus` is private[spark]), so what the status
+    * tracker reports covers the jobs that have already started.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(120000L)
 }

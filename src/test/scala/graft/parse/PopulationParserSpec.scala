@@ -35,4 +35,18 @@ class PopulationParserSpec extends SparkSpec {
   test("population values cast to double") {
     assert(parsed.filter("Year = 2013").head().getDouble(1) == 316128839.0)
   }
+
+  test("the explicit-schema read gives the inferred read's rows, on the fixture and a gen.py source") {
+    Seq("population.json", "population_gen.json").foreach { f =>
+      val inferred = PopulationParser.parse(
+        spark.read.option("multiLine", "true").json(fixturePath(f)))
+      val explicit = PopulationParser.parseFile(spark, fixturePath(f))
+      assert(explicit.schema == inferred.schema)
+      assert(explicit.collect().toSeq.sortBy(_.getInt(0)) == inferred.collect().toSeq.sortBy(_.getInt(0)), f)
+    }
+  }
+
+  test("parseFile issues no schema-inference job") {
+    assert(jobsDuring(PopulationParser.parseFile(spark, fixturePath("population_gen.json"))) == 0)
+  }
 }

@@ -1,11 +1,13 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.util.Success
 
 import org.apache.spark.sql.functions.col
+
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import graft.dq.{DqRun, DqSummary}
@@ -101,6 +103,32 @@ class PipelineSpec extends SparkSpec {
 
     val e = intercept[IllegalArgumentException](Pipeline.runAnalytics(spark, cfg))
     assert(e.getMessage.contains("BLS parse produced 0 rows"))
+  }
+
+  test("a population document without `data` fails analytics") {
+    val cfg = RawZone("graft_test_nodata_db",
+      population = """{"columns": ["Nation", "Population", "Year"]}""".getBytes("UTF-8"))
+    val e = intercept[IllegalArgumentException](Pipeline.runAnalytics(spark, cfg))
+    assert(e.getMessage.contains("population parse produced 0 rows"))
+  }
+
+  /** Every file of the three published tables' directories, by path. */
+  private def tableBytes(cfg: PipelineConfig): Map[String, Seq[Byte]] =
+    Pipeline.publishedTables(cfg.database).flatMap { t =>
+      val dir = Paths.get(TableSink.location(spark, t).toUri.getPath)
+      val files = Files.list(dir).iterator().asScala.toSeq
+      files.map((f: Path) => f.toString -> Files.readAllBytes(f).toSeq)
+    }.toMap
+
+  test("analytics job budgets: full path <= 15 jobs; on unchanged input <= 1, tables byte-identical") {
+    val cfg = RawZone("graft_test_budget_db")
+    val full = jobsDuring(Pipeline.runAnalytics(spark, cfg))
+    assert(full <= 15, s"the full analytics path ran $full jobs")
+    val before = tableBytes(cfg)
+    val skip = jobsDuring(Pipeline.runAnalytics(spark, cfg))
+    assert(skip <= 1, s"the skip path ran $skip jobs; only the run-log append may run one")
+    assert(!AnalyticsRun.latest(spark, cfg.database).get.recomputed)
+    assert(tableBytes(cfg) == before, "the skip path touched a published table")
   }
 
   test("validate fails on a missing output table") {
