@@ -25,10 +25,14 @@ object LocalFileStore extends FileStore {
 
   override def listFiles(dir: String): Seq[String] =
     if (!Files.isDirectory(p(dir))) Seq.empty
-    else Files.list(p(dir)).iterator().asScala
-      .filter(Files.isRegularFile(_))
-      .map(_.getFileName.toString)
-      .toSeq.sorted
+    else {
+      val entries = Files.list(p(dir))
+      try entries.iterator().asScala
+        .filter(Files.isRegularFile(_))
+        .map(_.getFileName.toString)
+        .toSeq.sorted
+      finally entries.close()
+    }
 
   override def read(path: String): Array[Byte] = Files.readAllBytes(p(path))
 

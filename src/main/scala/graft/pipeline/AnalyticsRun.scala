@@ -8,19 +8,20 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.{SPARK_VERSION, SparkContext}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftshim.SparkShims
 
 import graft.dq.DqRun
-import graft.ingest.{Hashing, Json}
+import graft.ingest.{Hashing, Json, LocalFileStore}
 
 /** The analytics stage's run record, written beside the tables it
   * publishes the way ingest writes `_meta` (PAPER.md §1.1): one
   * write-once file per run under `<db>.db/_meta/runs/` plus an
-  * overwritten `<db>.db/_meta/latest.json`.
+  * overwritten `<db>.db/_meta/latest.json`. The warehouse is a local
+  * directory, like the raw zone, so the record and the table listings
+  * go through [[graft.ingest.LocalFileStore]] and `java.nio`, not
+  * Hadoop's checksummed file system.
   *
   * @param status      success | failed
   * @param recomputed  false when the run reused the previous run's
@@ -47,8 +48,9 @@ final case class AnalyticsRunMeta(
     wall_s: Double,
     rounds: Seq[RoundMeta])
 
-/** A published table: rows (summed from its parquet footers), catalog
-  * schema as JSON, and its data files.
+/** A published table: the rows its write wrote, its schema as JSON
+  * (the written frame's, all columns nullable, as Spark stores it) and
+  * its data files.
   */
 final case class TableMeta(rows: Long, schema: String, files: Seq[DataFile])
 
@@ -123,27 +125,11 @@ object AnalyticsRun {
     * directory is gone.
     */
   def dataFiles(spark: SparkSession, table: String): Option[Seq[DataFile]] = {
-    val dir = TableSink.location(spark, table)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) None
-    else Some(fs.listStatus(dir).toSeq
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-      .map(s => DataFile(s.getPath.getName, s.getLen))
-      .sortBy(_.name))
-  }
-
-  /** `table` as just written: rows from its parquet footers, read on
-    * the driver, so describing it issues no Spark job.
-    */
-  def describe(spark: SparkSession, table: String): TableMeta = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = TableSink.location(spark, table)
-    val files = dataFiles(spark, table).getOrElse(Nil)
-    val rows = files.map { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(dir, f.name), conf))
-      try reader.getRecordCount finally reader.close()
-    }.sum
-    TableMeta(rows, spark.table(table).schema.json, files)
+    val dir = Paths.get(TableSink.location(spark, table).toUri.getPath)
+    if (!Files.isDirectory(dir)) None
+    else Some(LocalFileStore.listFiles(dir.toString)
+      .filterNot(n => n.startsWith("_") || n.startsWith("."))
+      .map(n => DataFile(n, Files.size(dir.resolve(n)))))
   }
 
   /** Whether `prev` can stand for a run with this `key` and `inputs`:
@@ -160,29 +146,21 @@ object AnalyticsRun {
       prev.dq.isDefined && prev.tables.keySet == tables.toSet &&
       prev.tables.forall { case (t, m) => dataFiles(spark, t).contains(m.files) }
 
-  private def metaDir(spark: SparkSession, database: String): Path =
-    new Path(TableSink.databaseDir(spark, database), "_meta")
+  private def metaDir(spark: SparkSession, database: String): String =
+    s"${TableSink.databaseDir(spark, database).toUri.getPath}/_meta"
 
   /** The record `latest.json` holds, if it exists and parses. */
-  def latest(spark: SparkSession, database: String): Option[AnalyticsRunMeta] = {
-    val path = new Path(metaDir(spark, database), "latest.json")
-    Try {
-      val in = path.getFileSystem(spark.sparkContext.hadoopConfiguration).open(path)
-      try Json.read(new String(in.readAllBytes(), UTF_8), classOf[AnalyticsRunMeta])
-      finally in.close()
-    }.toOption
-  }
+  def latest(spark: SparkSession, database: String): Option[AnalyticsRunMeta] = Try {
+    val bytes = LocalFileStore.read(s"${metaDir(spark, database)}/latest.json")
+    Json.read(new String(bytes, UTF_8), classOf[AnalyticsRunMeta])
+  }.toOption
 
   /** Writes `meta` create-only under `runs/` and over `latest.json`. */
   def write(spark: SparkSession, database: String, meta: AnalyticsRunMeta): Unit = {
     val dir = metaDir(spark, database)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = Json.write(meta).getBytes(UTF_8)
-    Seq(new Path(dir, s"runs/${meta.run_id}.json") -> false, new Path(dir, "latest.json") -> true)
-      .foreach { case (p, overwrite) =>
-        val out = fs.create(p, overwrite)
-        try out.write(bytes) finally out.close()
-      }
+    LocalFileStore.write(s"$dir/runs/${meta.run_id}.json", bytes, overwrite = false)
+    LocalFileStore.write(s"$dir/latest.json", bytes, overwrite = true)
   }
 }
 
@@ -213,6 +191,14 @@ private[pipeline] final class RoundClock(sc: SparkContext, runId: String) {
       timed.add(Timed(name, within, (System.nanoTime() - t) / 1e9))
       sc.setLocalProperty(JobGroup, prev)
     }
+  }
+
+  /** The records the jobs of round `name` wrote to files; call it once
+    * the round has ended.
+    */
+  def rowsWritten(name: String): Long = {
+    SparkShims.drainListenerBus(sc)
+    SparkShims.recordsWritten(sc, group(name))
   }
 
   /** The rounds that have ended, top-level ones in order. */

@@ -105,9 +105,14 @@ object TableSink {
       spark.catalog.createTable(table, "parquet", schema, Map("path" -> p.toString))
     }
 
+  /** The schema a table written from `df` has: Spark writes every
+    * parquet column as nullable.
+    */
+  def storedSchema(df: DataFrame): StructType =
+    StructType(df.schema.fields.map(_.copy(nullable = true)))
+
   def append(df: DataFrame, table: String): Unit = {
-    // Spark writes every parquet column as nullable
-    adopt(df.sparkSession, table, StructType(df.schema.fields.map(_.copy(nullable = true))))
+    adopt(df.sparkSession, table, storedSchema(df))
     df.write.mode("append").format("parquet").saveAsTable(table)
   }
 }
@@ -219,9 +224,12 @@ object Pipeline {
             run_utc = java.time.Instant.now().toString, recomputed = false)))
           published = prev.tables
         case None =>
-          val measured = recompute(spark, config, tables, clock)
+          val (measured, schemas) = recompute(spark, config, tables, clock)
           dq = Some(measured)
-          published = clock("describe")(tables.map(t => t -> AnalyticsRun.describe(spark, t)).toMap)
+          published = clock("describe")(tables.map { t =>
+            t -> TableMeta(clock.rowsWritten(s"write $t"), schemas(t).json,
+              AnalyticsRun.dataFiles(spark, t).getOrElse(Nil))
+          }.toMap)
       }
       val run = dq.get
       clock("append")(
@@ -236,13 +244,14 @@ object Pipeline {
   }
 
   /** The full path: parse, then the three overwrites and the DQ metrics
-    * as concurrent rounds inside one `publish` round.
+    * as concurrent rounds inside one `publish` round. Returns the DQ
+    * counts and the schema each table was written with.
     */
   private def recompute(
       spark: SparkSession,
       config: PipelineConfig,
       tables: Seq[String],
-      clock: RoundClock)(implicit ec: ExecutionContext): DqRun = {
+      clock: RoundClock)(implicit ec: ExecutionContext): (DqRun, Map[String, StructType]) = {
     val (bls, population) = clock("parse")((
       BlsParser.parseFile(spark, s"${config.blsTargetDir}/${config.blsFileName}"),
       PopulationParser.parseFile(spark, config.populationTargetPath)))
@@ -254,13 +263,16 @@ object Pipeline {
         best -> Analytics.bestYearBySeries(bls),
         report -> Analytics.reportSeriesQ01(bls, population))
         .map { case (name, df) =>
-          Future(clock(s"write $name", inPublish)(TableSink.overwrite(df, name)))
+          Future(clock(s"write $name", inPublish) {
+            TableSink.overwrite(df, name)
+            name -> TableSink.storedSchema(df)
+          })
         }
       val metrics = Future(clock("dq metrics", inPublish)(DataQuality.measure(bls, population)))
       val rounds = writes :+ metrics
       rounds.foreach(Await.ready(_, Duration.Inf))
       rounds.foreach(_.value.get.get) // rethrows the first failure
-      metrics.value.get.get
+      (metrics.value.get.get, writes.map(_.value.get.get).toMap)
     }
   }
 

@@ -31,4 +31,18 @@ object SparkShims {
     */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty(120000L)
+
+  /** The records the jobs of job group `group` wrote to files, summed
+    * over their completed stage attempts in the status store
+    * (`statusStore` is private[spark]). Covers the events the listener
+    * bus has delivered (see [[drainListenerBus]]).
+    */
+  def recordsWritten(sc: org.apache.spark.SparkContext, group: String): Long = {
+    val store = sc.statusStore
+    sc.statusTracker.getJobIdsForGroup(group).toSeq
+      .flatMap(store.job(_).stageIds).distinct
+      .flatMap(store.stageData(_))
+      .filter(_.status == org.apache.spark.status.api.v1.StageStatus.COMPLETE)
+      .map(_.outputRecords).sum
+  }
 }

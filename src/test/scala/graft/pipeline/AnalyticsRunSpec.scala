@@ -43,6 +43,8 @@ class AnalyticsRunSpec extends SparkSpec {
       "recomputed", "key", "inputs", "dq", "tables", "wall_s", "rounds"))
     assert(Files.exists(dbDir(cfg).resolve(s"_meta/runs/${meta.run_id}.json")))
     assert(latest(cfg) == meta, "the record must read back as written")
+    assert(Files.list(dbDir(cfg).resolve("_meta")).iterator().asScala
+      .forall(!_.getFileName.toString.endsWith(".crc")), "the record is written without checksum files")
 
     assert(meta.status == "success" && meta.recomputed && meta.error.isEmpty)
     assert(meta.rounds.map(_.name) ==
